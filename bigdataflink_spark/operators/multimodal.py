@@ -21,12 +21,8 @@ Two codec tiers:
   DCT, 4:4:4, Huffman, full JFIF segment walk, numpy-only — see the
   JPEG section below. Lossy, so correctness is pinned by round-trip
   error contracts (q187) + an exact-DC constant-block test.
-* ``image/gif`` — a REAL GIF89a codec (round 6): variable-code-size
-  LZW, 4-pass row interlace, multi-frame animation with disposal +
-  transparency compositing — see the GIF section below. Lossless,
-  byte-exact generative oracle (q194).
-* remaining compressed formats (video containers/MP4…) — require
-  ffmpeg, which this container doesn't ship; those branches fall back
+* remaining compressed formats (GIF, video containers/MP4…) — require
+  PIL/ffmpeg, which this container doesn't ship; those branches fall back
   to a clearly-marked deterministic sha256 FAKE (frames) or raise,
   with the Spark-side plumbing — schemas, Arrow batch shapes,
   fan-out — identical to what a real codec build runs.
@@ -1848,6 +1844,27 @@ def jpeg_encode(
     )
 
 
+def _huffman_lengths(freqs: dict[int, int], max_len: int) -> "dict | None":
+    """Optimal prefix-code lengths (Huffman, heapq) for >= 2 symbols;
+    None when the optimal code needs more than ``max_len`` bits."""
+    import heapq
+
+    heap = [(f, i, (s,)) for i, (s, f) in enumerate(sorted(freqs.items()))]
+    heapq.heapify(heap)
+    tick = len(heap)
+    depth: dict[int, int] = {s: 0 for s in freqs}
+    while len(heap) > 1:
+        f1, _, g1 = heapq.heappop(heap)
+        f2, _, g2 = heapq.heappop(heap)
+        for s in g1 + g2:
+            depth[s] += 1
+        heapq.heappush(heap, (f1 + f2, tick, g1 + g2))
+        tick += 1
+    if max(depth.values()) > max_len:
+        return None
+    return depth
+
+
 def _optimal_dht(freqs: dict[int, int]) -> tuple[list, list]:
     """Per-image optimal JPEG Huffman table (libjpeg's
     jpeg_gen_optimal_table idea): (BITS[16], HUFFVAL) from symbol
@@ -1858,8 +1875,6 @@ def _optimal_dht(freqs: dict[int, int]) -> tuple[list, list]:
     dropped after assignment; 1-padding at scan end can then never
     decode as a real symbol). Needed for 12-bit streams, whose DC
     categories reach past what the Annex K tables cover."""
-    from bigdataflink_spark.operators.zstd import _huffman_lengths
-
     work = {s: int(f) for s, f in freqs.items() if f > 0}
     work[256] = 1  # the all-ones-code reservation
     lengths = None
@@ -2954,10 +2969,9 @@ def jpeg_decode(payload: bytes) -> np.ndarray:
     batched IDCT, with nearest-neighbor chroma upsampling that
     handles fractional sampling ratios (3x1 luma over 2x1 chroma)
     via the T.81 A.1.1 index formula. LOSSLESS (SOF3, round 9 —
-    Annex H prediction, byte-exact) and the ARITHMETIC profiles
-    (round 10, operators/jpeg_arith.py: SOF9 sequential, SOF10
-    progressive, SOF11 lossless, with DAC conditioning) decode too;
-    only differential/hierarchical SOFs raise NotImplementedError."""
+    Annex H prediction, byte-exact) decodes too; arithmetic-coded
+    (SOF9-11) and differential/hierarchical SOFs raise
+    NotImplementedError."""
     import struct
 
     if payload[:2] != b"\xff\xd8":
@@ -2967,8 +2981,6 @@ def jpeg_decode(payload: bytes) -> np.ndarray:
     htables: dict[int, dict] = {}
     comps = None  # SOF order: (cid, h_i, v_i, tq)
     progressive = False
-    arithmetic = False
-    arith_cond: dict = {"dc": {}, "ac": {}}  # DAC conditioning (B.2.4.3)
     lossless = False
     lplanes = None  # lossless: cid -> h×w list-of-lists sample plane
     lpt: dict[int, int] = {}  # lossless: cid -> point transform
@@ -3025,32 +3037,19 @@ def jpeg_decode(payload: bytes) -> np.ndarray:
                 b += 17 + nv
         elif marker == 0xDD:  # DRI (may change between scans)
             (restart_interval,) = struct.unpack(">H", body[:2])
-        elif marker == 0xCC:  # DAC — arithmetic conditioning (B.2.4.3)
-            b = 0
-            while b + 1 < len(body):
-                tc_tb, cs = body[b], body[b + 1]
-                if tc_tb >> 4 == 0:  # DC: L low nibble, U high nibble
-                    arith_cond["dc"][tc_tb & 0x0F] = (cs & 0x0F, cs >> 4)
-                else:  # AC: Cs = Kx
-                    arith_cond["ac"][tc_tb & 0x0F] = cs
-                b += 2
-        elif marker in (0xC0, 0xC1, 0xC2, 0xC3, 0xC9, 0xCA, 0xCB):
+        elif marker in (0xC0, 0xC1, 0xC2, 0xC3):
             # SOF0 baseline / SOF1 extended sequential (round 8 —
             # baseline machinery with a 12-bit-capable sample width) /
             # SOF2 progressive / SOF3 lossless (round 9 — Annex H
-            # predictive coding, no DCT, decodes bit-exactly) /
-            # SOF9 + SOF10 + SOF11 arithmetic sequential/progressive/
-            # lossless (round 10 — same DCT/prediction machinery,
-            # QM-coded entropy layer in operators/jpeg_arith.py)
-            progressive = marker in (0xC2, 0xCA)
-            arithmetic = marker in (0xC9, 0xCA, 0xCB)
-            lossless = marker in (0xC3, 0xCB)
+            # predictive coding, no DCT, decodes bit-exactly)
+            progressive = marker == 0xC2
+            lossless = marker == 0xC3
             if len(body) < 6:
                 raise ValueError("truncated SOF segment")
             prec, h, w, nc = struct.unpack(">BHHB", body[:6])
-            if marker in (0xC3, 0xCB):
+            if marker == 0xC3:
                 allowed = tuple(range(2, 17))
-            elif marker in (0xC1, 0xC9, 0xCA):
+            elif marker == 0xC1:
                 allowed = (8, 12)
             else:
                 allowed = (8,)
@@ -3058,7 +3057,7 @@ def jpeg_decode(payload: bytes) -> np.ndarray:
                 raise NotImplementedError(
                     f"precision {prec} invalid for SOF{marker - 0xC0} "
                     "(8 for baseline/progressive, 8 or 12 for "
-                    "extended sequential/arithmetic, 2-16 for "
+                    "extended sequential, 2-16 for "
                     "lossless); 1- or 3-component only"
                 )
             precision = prec
@@ -3066,10 +3065,10 @@ def jpeg_decode(payload: bytes) -> np.ndarray:
             for i in range(nc):
                 cid, samp, tq = body[6 + 3 * i : 9 + 3 * i]
                 comps.append((cid, samp >> 4, samp & 0x0F, tq))
-        elif marker in (0xC5, 0xC6, 0xC7, 0xCD, 0xCE, 0xCF):
+        elif marker in (0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
             raise NotImplementedError(
-                f"SOF{marker - 0xC0} (differential/hierarchical) "
-                "not supported"
+                f"SOF{marker - 0xC0} (arithmetic-coded or "
+                "differential/hierarchical) not supported"
             )
         elif marker == 0xDA:  # SOS — decode this scan in place
             if comps is None:
@@ -3105,53 +3104,6 @@ def jpeg_decode(payload: bytes) -> np.ndarray:
             ss, se, a = body[1 + 2 * ns], body[2 + 2 * ns], body[3 + 2 * ns]
             ah, al = a >> 4, a & 0x0F
             entropy = payload[pos + 2 + seglen :]
-            if arithmetic:
-                from bigdataflink_spark.operators.jpeg_arith import (
-                    arith_decode_scan,
-                    arith_lossless_scan,
-                )
-
-                if lossless:
-                    if lplanes is None:
-                        for cid, ch, cv, _ in comps:
-                            if ch != 1 or cv != 1:
-                                raise NotImplementedError(
-                                    "lossless JPEG with subsampling not "
-                                    "supported (Hi=Vi=1 only)"
-                                )
-                        lplanes = {
-                            cid: [[0] * w for _ in range(h)]
-                            for cid, _, _, _ in comps
-                        }
-                    for cs, _, _ in scan_comps:
-                        lpt[cs] = al
-                    p = arith_lossless_scan(
-                        entropy, scan_comps, ss, al, lplanes, h, w,
-                        precision, restart_interval, arith_cond,
-                    )
-                else:
-                    p = arith_decode_scan(
-                        entropy, scan_comps, ss, se, ah, al, progressive,
-                        store, nb, comp_blocks, by_id, mcus_y, mcus_x,
-                        restart_interval, arith_cond,
-                    )
-                saw_scan = True
-                while True:
-                    nxt = entropy.find(b"\xff", p)
-                    if nxt == -1 or nxt + 1 >= len(entropy):
-                        p = len(entropy)
-                        break
-                    b2 = entropy[nxt + 1]
-                    if b2 == 0x00:
-                        p = nxt + 2
-                        continue
-                    if b2 == 0xFF:
-                        p = nxt + 1
-                        continue
-                    p = nxt
-                    break
-                pos = pos + 2 + seglen + p
-                continue
             br = _BitReader(entropy)
             if lossless:
                 if lplanes is None:
@@ -3256,984 +3208,6 @@ def jpeg_decode(payload: bytes) -> np.ndarray:
     b = y + 1.772 * (cb - half)
     out = np.stack([r, g, b], axis=2)
     return np.clip(np.round(out), 0, maxv).astype(dtype)
-
-
-# ---------------------------------------------------------------------------
-# MP4 / ISO Base Media File Format (ISO/IEC 14496-12) — CONTAINER-level
-# support: a generative builder emitting real ftyp/mdat/moov trees and
-# a recursive box-walk parser extracting the metadata a 100-TB video
-# ingest needs before any frame is decoded (brands, movie/track
-# durations, handler types, codec fourcc, sample tables, chunk
-# offsets). Frame/codec DECODE stays honestly gated on ffmpeg — the
-# container layer is pure stdlib struct, like the WAV/RIFF walk.
-# Reference behavior: /root/reference treats media as opaque blobs;
-# this section follows the repo's own codec pattern (q183/q184/q187).
-# ---------------------------------------------------------------------------
-
-MP4_VIDEO = "video/mp4"
-
-
-def _mp4_box(typ: bytes, payload: bytes) -> bytes:
-    import struct
-
-    return struct.pack(">I", len(payload) + 8) + typ + payload
-
-
-def _mp4_full(typ: bytes, version: int, flags: int, payload: bytes) -> bytes:
-    import struct
-
-    return _mp4_box(typ, struct.pack(">B", version) + struct.pack(">I", flags)[1:] + payload)
-
-
-_MP4_MATRIX = (0x00010000, 0, 0, 0, 0x00010000, 0, 0, 0, 0x40000000)
-
-
-def mp4_build(tracks: list[dict], movie_timescale: int = 1000) -> bytes:
-    """Build a real (metadata-faithful) MP4: ``ftyp`` + one ``mdat``
-    carrying every track's samples back-to-back + a trailing ``moov``
-    with full mvhd / per-track tkhd+mdhd+hdlr+minf(stbl) trees —
-    stts/stsc/stsz/stco sample tables included, stco holding TRUE
-    absolute file offsets (one chunk per track). Track spec::
-
-        {"handler": "vide"|"soun", "codec": "avc1"|"mp4a"|...,
-         "timescale": int, "sample_delta": int,
-         "sample_sizes": [int, ...],        # one mdat blob per sample
-         "width": int, "height": int}       # video only
-
-    Sample PAYLOADS are deterministic filler (byte k of sample j is
-    (j*31 + k) % 256) — the container is the artifact here; supplying
-    real codec bitstreams is the caller's business. Codec-specific
-    config boxes (avcC/esds) are intentionally absent: this is
-    metadata-level fidelity, decode stays gated on ffmpeg."""
-    import struct
-
-    mdat_payload = bytearray()
-    chunk_offsets = []
-    for t in tracks:
-        chunk_offsets.append(len(mdat_payload))
-        for j, size in enumerate(t["sample_sizes"]):
-            ks = np.arange(size, dtype=np.int64)
-            mdat_payload += ((j * 31 + ks) % 256).astype(np.uint8).tobytes()
-    ftyp = _mp4_box(b"ftyp", b"isom" + struct.pack(">I", 0x200) + b"isomiso2mp41")
-    mdat_start = len(ftyp)
-    payload_base = mdat_start + 8  # mdat header precedes the payload
-
-    def visual_entry(t: dict) -> bytes:
-        # VisualSampleEntry (§12.1.3): 6 reserved + data_ref_idx, then
-        # pre_defined/reserved, width/height, 72dpi 16.16, frame_count
-        # 1, 32-byte compressorname, depth 24, pre_defined -1
-        body = (
-            bytes(6)
-            + struct.pack(">H", 1)
-            + bytes(16)
-            + struct.pack(">HH", t["width"], t["height"])
-            + struct.pack(">II", 0x480000, 0x480000)
-            + struct.pack(">I", 0)
-            + struct.pack(">H", 1)
-            + bytes(32)
-            + struct.pack(">Hh", 24, -1)
-        )
-        return _mp4_box(t["codec"].encode(), body)
-
-    def audio_entry(t: dict) -> bytes:
-        # AudioSampleEntry (§12.2.3): 6 reserved + data_ref_idx, 2×4
-        # reserved, channelcount 2, samplesize 16, pre_defined,
-        # reserved, samplerate (timescale << 16)
-        body = (
-            bytes(6)
-            + struct.pack(">H", 1)
-            + bytes(8)
-            + struct.pack(">HHHH", 2, 16, 0, 0)
-            + struct.pack(">I", t["timescale"] << 16)
-        )
-        return _mp4_box(t["codec"].encode(), body)
-
-    traks = []
-    max_dur_movie = 0
-    for track_id, t in enumerate(tracks, start=1):
-        n = len(t["sample_sizes"])
-        dur_media = n * t["sample_delta"]
-        dur_movie = dur_media * movie_timescale // t["timescale"]
-        max_dur_movie = max(max_dur_movie, dur_movie)
-        is_video = t["handler"] == "vide"
-        tkhd = _mp4_full(
-            b"tkhd",
-            0,
-            7,  # enabled | in_movie | in_preview
-            struct.pack(">II", 0, 0)
-            + struct.pack(">I", track_id)
-            + bytes(4)
-            + struct.pack(">I", dur_movie)
-            + bytes(8)
-            + struct.pack(">hhhh", 0, 0, 0 if is_video else 0x0100, 0)
-            + struct.pack(">9i", *_MP4_MATRIX)
-            + struct.pack(
-                ">II",
-                (t.get("width", 0)) << 16,
-                (t.get("height", 0)) << 16,
-            ),
-        )
-        mdhd = _mp4_full(
-            b"mdhd",
-            0,
-            0,
-            struct.pack(">II", 0, 0)
-            + struct.pack(">II", t["timescale"], dur_media)
-            + struct.pack(">HH", 0x55C4, 0),  # language 'und'
-        )
-        hdlr = _mp4_full(
-            b"hdlr",
-            0,
-            0,
-            struct.pack(">I", 0)
-            + t["handler"].encode()
-            + bytes(12)
-            + b"\x00",
-        )
-        stsd = _mp4_full(
-            b"stsd",
-            0,
-            0,
-            struct.pack(">I", 1)
-            + (visual_entry(t) if is_video else audio_entry(t)),
-        )
-        stts = _mp4_full(
-            b"stts", 0, 0, struct.pack(">III", 1, n, t["sample_delta"])
-        )
-        stsc = _mp4_full(b"stsc", 0, 0, struct.pack(">IIII", 1, 1, n, 1))
-        stsz = _mp4_full(
-            b"stsz",
-            0,
-            0,
-            struct.pack(">II", 0, n)
-            + struct.pack(f">{n}I", *t["sample_sizes"]),
-        )
-        stco = _mp4_full(
-            b"stco",
-            0,
-            0,
-            struct.pack(
-                ">II", 1, payload_base + chunk_offsets[track_id - 1]
-            ),
-        )
-        stbl = _mp4_box(b"stbl", stsd + stts + stsc + stsz + stco)
-        dref = _mp4_full(
-            b"dref", 0, 0, struct.pack(">I", 1) + _mp4_full(b"url ", 0, 1, b"")
-        )
-        dinf = _mp4_box(b"dinf", dref)
-        mhd = (
-            _mp4_full(b"vmhd", 0, 1, struct.pack(">HHHH", 0, 0, 0, 0))
-            if is_video
-            else _mp4_full(b"smhd", 0, 0, struct.pack(">HH", 0, 0))
-        )
-        minf = _mp4_box(b"minf", mhd + dinf + stbl)
-        mdia = _mp4_box(b"mdia", mdhd + hdlr + minf)
-        traks.append(_mp4_box(b"trak", tkhd + mdia))
-    mvhd = _mp4_full(
-        b"mvhd",
-        0,
-        0,
-        struct.pack(">II", 0, 0)
-        + struct.pack(">II", movie_timescale, max_dur_movie)
-        + struct.pack(">IHH", 0x00010000, 0x0100, 0)
-        + bytes(8)
-        + struct.pack(">9i", *_MP4_MATRIX)
-        + bytes(24)
-        + struct.pack(">I", len(tracks) + 1),
-    )
-    moov = _mp4_box(b"moov", mvhd + b"".join(traks))
-    return ftyp + _mp4_box(b"mdat", bytes(mdat_payload)) + moov
-
-
-def _mp4_children(payload: bytes, base: int = 0) -> list[tuple[str, int, int]]:
-    """One level of box headers inside ``payload``: (type, body_start,
-    body_end) with 64-bit largesize support (size==1) and
-    to-end-of-file boxes (size==0)."""
-    import struct
-
-    out = []
-    pos = 0
-    while pos + 8 <= len(payload):
-        (size,) = struct.unpack(">I", payload[pos : pos + 4])
-        typ = payload[pos + 4 : pos + 8].decode("latin-1")
-        body = pos + 8
-        if size == 1:
-            (size,) = struct.unpack(">Q", payload[pos + 8 : pos + 16])
-            body = pos + 16
-        elif size == 0:
-            size = len(payload) - pos
-        if size < 8 or pos + size > len(payload):
-            raise ValueError(f"mp4 box {typ!r} overruns its container")
-        out.append((typ, base + body, base + pos + size))
-        pos += size
-    return out
-
-
-def mp4_scan(payload: bytes) -> dict:
-    """Box-walk metadata extraction (no frame decode): returns
-    ``{"brand", "movie_timescale", "duration_ms", "n_tracks",
-    "tracks": [{"track_id", "handler", "codec", "timescale",
-    "n_samples", "total_sample_bytes", "duration_ms",
-    "width", "height", "chunk_offsets"}, ...]}``.
-
-    Handles v0 and v1 mvhd/tkhd/mdhd (64-bit times), 64-bit
-    largesize boxes, and unknown boxes (skipped by size — the same
-    tolerance the WAV walk applies to LIST/fact chunks)."""
-    import struct
-
-    def full(buf: bytes) -> tuple[int, bytes]:
-        return buf[0], buf[4:]
-
-    top = _mp4_children(payload)
-    meta = {"brand": None, "movie_timescale": None, "duration_ms": None}
-    tracks = []
-    trex_defaults: dict[int, tuple[int, int]] = {}  # id -> (delta, size)
-    n_fragments = 0
-    for typ, s, e in top:
-        if typ == "ftyp":
-            meta["brand"] = payload[s : s + 4].decode("latin-1")
-        elif typ == "moov":
-            for btyp, bs, be in _mp4_children(payload[s:e], s):
-                body = payload[bs:be]
-                if btyp == "mvhd":
-                    v, b = full(body)
-                    if v == 1:
-                        ts, dur = struct.unpack(">IQ", b[16:28])
-                    else:
-                        ts, dur = struct.unpack(">II", b[8:16])
-                    meta["movie_timescale"] = ts
-                    meta["duration_ms"] = dur * 1000 // ts
-                elif btyp == "trak":
-                    tracks.append(_mp4_track(payload, bs, be))
-                elif btyp == "mvex":
-                    for xt, xs, xe in _mp4_children(payload[bs:be], bs):
-                        if xt == "trex":
-                            tid, _desc, ddelta, dsize, _fl = struct.unpack(
-                                ">IIIII", payload[xs + 4 : xs + 24]
-                            )
-                            trex_defaults[tid] = (ddelta, dsize)
-        elif typ == "moof":
-            n_fragments += 1
-            moof_start = s - 8  # trun offsets are moof-start-relative
-            by_id = {t["track_id"]: t for t in tracks}
-            for btyp, bs, be in _mp4_children(payload[s:e], s):
-                if btyp != "traf":
-                    continue
-                tfhd_id, base_is_moof, def_size = None, False, None
-                for ft, fs, fe in _mp4_children(payload[bs:be], bs):
-                    fbody = payload[fs:fe]
-                    if ft == "tfhd":
-                        flags = int.from_bytes(fbody[1:4], "big")
-                        (tfhd_id,) = struct.unpack(">I", fbody[4:8])
-                        base_is_moof = bool(flags & 0x020000)
-                        pos = 8
-                        if flags & 0x1:  # base-data-offset
-                            pos += 8
-                        if flags & 0x2:  # sample-description-index
-                            pos += 4
-                        if flags & 0x8:  # default-sample-duration
-                            pos += 4
-                        if flags & 0x10:  # default-sample-size
-                            (def_size,) = struct.unpack(
-                                ">I", fbody[pos : pos + 4]
-                            )
-                    elif ft == "trun":
-                        flags = int.from_bytes(fbody[1:4], "big")
-                        (count,) = struct.unpack(">I", fbody[4:8])
-                        pos = 8
-                        data_off = None
-                        if flags & 0x1:
-                            (data_off,) = struct.unpack(
-                                ">i", fbody[pos : pos + 4]
-                            )
-                            pos += 4
-                        if flags & 0x4:  # first-sample-flags
-                            pos += 4
-                        per = sum(
-                            4
-                            for bit in (0x100, 0x200, 0x400, 0x800)
-                            if flags & bit
-                        )
-                        sizes = []
-                        for k in range(count):
-                            row = fbody[pos + k * per : pos + (k + 1) * per]
-                            rp = 0
-                            if flags & 0x100:
-                                rp += 4
-                            if flags & 0x200:
-                                sizes.append(
-                                    struct.unpack(">I", row[rp : rp + 4])[0]
-                                )
-                        t = by_id.get(tfhd_id)
-                        if t is None:
-                            continue
-                        t["n_samples"] += count
-                        if sizes:
-                            t["total_sample_bytes"] += sum(sizes)
-                        else:
-                            fallback = (
-                                def_size
-                                if def_size is not None
-                                else trex_defaults.get(tfhd_id, (0, 0))[1]
-                            )
-                            t["total_sample_bytes"] += fallback * count
-                        if data_off is not None and base_is_moof:
-                            t["chunk_offsets"].append(moof_start + data_off)
-    meta["n_tracks"] = len(tracks)
-    meta["n_fragments"] = n_fragments
-    meta["tracks"] = tracks
-    return meta
-
-
-def _mp4_track(payload: bytes, s: int, e: int) -> dict:
-    import struct
-
-    t = {
-        "track_id": None,
-        "handler": None,
-        "codec": None,
-        "timescale": None,
-        "n_samples": 0,
-        "total_sample_bytes": 0,
-        "duration_ms": None,
-        "width": 0,
-        "height": 0,
-        "chunk_offsets": [],
-    }
-
-    def walk(lo: int, hi: int) -> None:
-        for typ, bs, be in _mp4_children(payload[lo:hi], lo):
-            body = payload[bs:be]
-            if typ == "tkhd":
-                v = body[0]
-                if v == 1:
-                    (t["track_id"],) = struct.unpack(">I", body[20:24])
-                    off = 84
-                else:
-                    (t["track_id"],) = struct.unpack(">I", body[12:16])
-                    off = 76
-                w, h = struct.unpack(">II", body[off : off + 8])
-                t["width"], t["height"] = w >> 16, h >> 16
-            elif typ == "mdhd":
-                v, b = body[0], body[4:]
-                if v == 1:
-                    ts, dur = struct.unpack(">IQ", b[16:28])
-                else:
-                    ts, dur = struct.unpack(">II", b[8:16])
-                t["timescale"] = ts
-                t["duration_ms"] = dur * 1000 // ts
-            elif typ == "hdlr":
-                t["handler"] = body[8:12].decode("latin-1")
-            elif typ == "stsd":
-                entries = _mp4_children(body[8:], 0)
-                if entries:
-                    t["codec"] = entries[0][0]
-            elif typ == "stts":
-                (n_ent,) = struct.unpack(">I", body[4:8])
-                t["n_samples"] = sum(
-                    struct.unpack(">I", body[8 + 8 * i : 12 + 8 * i])[0]
-                    for i in range(n_ent)
-                )
-            elif typ == "stsz":
-                fixed, n = struct.unpack(">II", body[4:12])
-                t["total_sample_bytes"] = (
-                    fixed * n
-                    if fixed
-                    else sum(struct.unpack(f">{n}I", body[12 : 12 + 4 * n]))
-                )
-            elif typ == "stco":
-                (n_ent,) = struct.unpack(">I", body[4:8])
-                t["chunk_offsets"] = list(
-                    struct.unpack(f">{n_ent}I", body[8 : 8 + 4 * n_ent])
-                )
-            elif typ == "co64":
-                (n_ent,) = struct.unpack(">I", body[4:8])
-                t["chunk_offsets"] = list(
-                    struct.unpack(f">{n_ent}Q", body[8 : 8 + 8 * n_ent])
-                )
-            elif typ in ("mdia", "minf", "stbl"):
-                walk(bs, be)
-
-    walk(s, e)
-    return t
-
-
-def mp4_frame_decode(payload: bytes):  # pragma: no cover - honest gate
-    """Frame decode needs a real codec (ffmpeg/PyAV), which this
-    container doesn't ship — the box walk above is the supported
-    surface. The container METADATA is differential-tested against
-    ffprobe wherever that binary exists (tests/test_native_seams.py::
-    test_ffprobe_mp4_container_differential, round 9)."""
-    raise NotImplementedError(
-        "mp4 frame decode requires ffmpeg/PyAV; mp4_scan provides the "
-        "container metadata surface"
-    )
-
-
-def mp4_build_fragmented(
-    tracks: list[dict],
-    samples_per_fragment: int = 8,
-    movie_timescale: int = 1000,
-) -> bytes:
-    """Fragmented-MP4 (fMP4/CMAF — the DASH/HLS wire shape) builder:
-    ``ftyp`` + ``moov`` whose sample tables are EMPTY (the fragmented
-    contract: stts/stsz/stco carry zero entries; an ``mvex`` with one
-    ``trex`` per track declares defaults instead) + a sequence of
-    ``moof``+``mdat`` pairs, each moof carrying mfhd (sequence
-    number) and one ``traf`` per track with tfhd
-    (default-base-is-moof), tfdt (base media decode time) and trun
-    (sample count, data offset RELATIVE TO MOOF START, per-sample
-    sizes). Same track-spec dicts as ``mp4_build``."""
-    import struct
-
-    ftyp = _mp4_box(
-        b"ftyp", b"isom" + struct.pack(">I", 0x200) + b"isomiso5cmfc"
-    )
-
-    def empty_stbl(t: dict, is_video: bool) -> bytes:
-        stsd = _mp4_full(
-            b"stsd",
-            0,
-            0,
-            struct.pack(">I", 1)
-            + (
-                _mp4_box(
-                    t["codec"].encode(),
-                    bytes(6)
-                    + struct.pack(">H", 1)
-                    + bytes(16)
-                    + struct.pack(">HH", t.get("width", 0), t.get("height", 0))
-                    + struct.pack(">II", 0x480000, 0x480000)
-                    + struct.pack(">I", 0)
-                    + struct.pack(">H", 1)
-                    + bytes(32)
-                    + struct.pack(">Hh", 24, -1)
-                )
-                if is_video
-                else _mp4_box(
-                    t["codec"].encode(),
-                    bytes(6)
-                    + struct.pack(">H", 1)
-                    + bytes(8)
-                    + struct.pack(">HHHH", 2, 16, 0, 0)
-                    + struct.pack(">I", t["timescale"] << 16),
-                )
-            ),
-        )
-        return _mp4_box(
-            b"stbl",
-            stsd
-            + _mp4_full(b"stts", 0, 0, struct.pack(">I", 0))
-            + _mp4_full(b"stsc", 0, 0, struct.pack(">I", 0))
-            + _mp4_full(b"stsz", 0, 0, struct.pack(">II", 0, 0))
-            + _mp4_full(b"stco", 0, 0, struct.pack(">I", 0)),
-        )
-
-    traks, trexs = [], []
-    for track_id, t in enumerate(tracks, start=1):
-        is_video = t["handler"] == "vide"
-        n = len(t["sample_sizes"])
-        dur_media = n * t["sample_delta"]
-        dur_movie = dur_media * movie_timescale // t["timescale"]
-        tkhd = _mp4_full(
-            b"tkhd",
-            0,
-            7,
-            struct.pack(">II", 0, 0)
-            + struct.pack(">I", track_id)
-            + bytes(4)
-            + struct.pack(">I", dur_movie)
-            + bytes(8)
-            + struct.pack(">hhhh", 0, 0, 0 if is_video else 0x0100, 0)
-            + struct.pack(">9i", *_MP4_MATRIX)
-            + struct.pack(
-                ">II", t.get("width", 0) << 16, t.get("height", 0) << 16
-            ),
-        )
-        mdhd = _mp4_full(
-            b"mdhd",
-            0,
-            0,
-            struct.pack(">II", 0, 0)
-            + struct.pack(">II", t["timescale"], dur_media)
-            + struct.pack(">HH", 0x55C4, 0),
-        )
-        hdlr = _mp4_full(
-            b"hdlr",
-            0,
-            0,
-            struct.pack(">I", 0) + t["handler"].encode() + bytes(12) + b"\x00",
-        )
-        mhd = (
-            _mp4_full(b"vmhd", 0, 1, struct.pack(">HHHH", 0, 0, 0, 0))
-            if is_video
-            else _mp4_full(b"smhd", 0, 0, struct.pack(">HH", 0, 0))
-        )
-        dinf = _mp4_box(
-            b"dinf",
-            _mp4_full(
-                b"dref", 0, 0, struct.pack(">I", 1) + _mp4_full(b"url ", 0, 1, b"")
-            ),
-        )
-        minf = _mp4_box(b"minf", mhd + dinf + empty_stbl(t, is_video))
-        traks.append(
-            _mp4_box(b"trak", tkhd + _mp4_box(b"mdia", mdhd + hdlr + minf))
-        )
-        trexs.append(
-            _mp4_full(
-                b"trex",
-                0,
-                0,
-                struct.pack(">IIIII", track_id, 1, t["sample_delta"], 0, 0),
-            )
-        )
-    max_dur = max(
-        (
-            len(t["sample_sizes"])
-            * t["sample_delta"]
-            * movie_timescale
-            // t["timescale"]
-        )
-        for t in tracks
-    )
-    mvhd = _mp4_full(
-        b"mvhd",
-        0,
-        0,
-        struct.pack(">II", 0, 0)
-        + struct.pack(">II", movie_timescale, max_dur)
-        + struct.pack(">IHH", 0x00010000, 0x0100, 0)
-        + bytes(8)
-        + struct.pack(">9i", *_MP4_MATRIX)
-        + bytes(24)
-        + struct.pack(">I", len(tracks) + 1),
-    )
-    moov = _mp4_box(b"moov", mvhd + b"".join(traks) + _mp4_box(b"mvex", b"".join(trexs)))
-
-    out = bytearray(ftyp + moov)
-    n_frag = max(
-        (len(t["sample_sizes"]) + samples_per_fragment - 1)
-        // samples_per_fragment
-        for t in tracks
-    )
-    seq = 0
-    for f in range(n_frag):
-        seq += 1
-        trafs_spec = []
-        frag_payload = bytearray()
-        for track_id, t in enumerate(tracks, start=1):
-            lo = f * samples_per_fragment
-            sizes = t["sample_sizes"][lo : lo + samples_per_fragment]
-            if not sizes:
-                continue
-            trafs_spec.append(
-                (track_id, lo * t["sample_delta"], sizes, len(frag_payload))
-            )
-            for j, size in enumerate(sizes, start=lo):
-                ks = np.arange(size, dtype=np.int64)
-                frag_payload += (
-                    ((j * 31 + ks) % 256).astype(np.uint8).tobytes()
-                )
-        # trun data_offset is relative to MOOF START (tfhd flag
-        # default-base-is-moof) — so the moof must be sized before
-        # offsets are final: build twice with a fixed-size layout
-        # (every field here is fixed-width given the sample counts)
-        def build_moof(payload_gap: int) -> bytes:
-            trafs = []
-            for track_id, tfdt_time, sizes, rel in trafs_spec:
-                tfhd = _mp4_full(
-                    b"tfhd", 0, 0x020000, struct.pack(">I", track_id)
-                )
-                tfdt = _mp4_full(b"tfdt", 1, 0, struct.pack(">Q", tfdt_time))
-                trun = _mp4_full(
-                    b"trun",
-                    0,
-                    0x000201,  # data-offset + sample-size present
-                    struct.pack(">I", len(sizes))
-                    + struct.pack(">i", payload_gap + rel)
-                    + struct.pack(f">{len(sizes)}I", *sizes),
-                )
-                trafs.append(_mp4_box(b"traf", tfhd + tfdt + trun))
-            mfhd = _mp4_full(b"mfhd", 0, 0, struct.pack(">I", seq))
-            return _mp4_box(b"moof", mfhd + b"".join(trafs))
-
-        moof_size = len(build_moof(0))
-        out += build_moof(moof_size + 8)  # gap = moof + mdat header
-        out += _mp4_box(b"mdat", bytes(frag_payload))
-    return bytes(out)
-
-
-# ---------------------------------------------------------------------------
-# GIF (image/gif) — a REAL GIF89a codec: variable-code-size LZW,
-# global/local color tables, 4-pass row interlace, multi-frame
-# animation with disposal + transparency compositing. Implemented
-# from the public GIF89a specification (CompuServe, 1990; mirrored at
-# w3.org/Graphics/GIF/spec-gif89a.txt) with stdlib + numpy only —
-# completing the lossless image family beside PNG (q183/q189). GIF is
-# palette-indexed and LOSSLESS, so like PNG the round-trip contract
-# (q194) pins every decoded byte against a closed-form oracle.
-# Reference parity: the reference pipeline treats media as opaque
-# payloads; this tier gives the payloads a real decodable format.
-
-GIF_IMAGE = "image/gif"
-
-# Row-interlace pass grid (GIF89a spec §20, appendix E): rows
-# (start, step) per pass — unlike PNG's Adam7 there is no column
-# interleave, so deinterlace is a pure row permutation.
-_GIF_INTERLACE = ((0, 8), (4, 8), (2, 4), (1, 2))
-
-_GIF_MAX_CODE = 4096  # 12-bit LZW code space (spec appendix F)
-
-
-def _gif_interlace_rows(h: int) -> list[int]:
-    """Row output order of an interlaced image (spec appendix E)."""
-    order = []
-    for y0, dy in _GIF_INTERLACE:
-        order.extend(range(y0, h, dy))
-    return order
-
-
-def _gif_lzw_encode(indices: bytes, mcs: int) -> bytes:
-    """GIF variable-code-size LZW (spec appendix F). Emits an initial
-    CLEAR, grows the code width as the table fills, and emits
-    CLEAR + reset when the table reaches 4096 entries. LSB-first bit
-    packing. The per-symbol dict walk is inherently sequential —
-    parallelism comes from the Arrow map stage batching across
-    frames/files, not from within one stream."""
-    clear = 1 << mcs
-    eoi = clear + 1
-    code_size = mcs + 1
-    out = bytearray()
-    acc = 0
-    nbits = 0
-
-    def emit(code: int) -> None:
-        nonlocal acc, nbits
-        acc |= code << nbits
-        nbits += code_size
-        while nbits >= 8:
-            out.append(acc & 0xFF)
-            acc >>= 8
-            nbits -= 8
-
-    table: dict[tuple[int, int], int] = {}
-    next_code = eoi + 1
-
-    def emit_data(code: int) -> None:
-        # giflib's growth contract: code width is driven by the COUNT
-        # of data codes emitted (checked at every emit against the
-        # pre-add next_code), NOT by entries added — the two differ
-        # at the final emit, where no entry follows but the decoder's
-        # mirrored per-read count still advances
-        nonlocal code_size
-        emit(code)
-        if next_code >= (1 << code_size) and code_size < 12:
-            code_size += 1
-
-    emit(clear)
-    if indices:
-        cur = indices[0]
-        for k in indices[1:]:
-            hit = table.get((cur, k))
-            if hit is not None:
-                cur = hit
-                continue
-            emit_data(cur)
-            if next_code == _GIF_MAX_CODE:
-                # table full: reset (decoder mirrors on CLEAR)
-                emit(clear)
-                table = {}
-                next_code = eoi + 1
-                code_size = mcs + 1
-            else:
-                table[(cur, k)] = next_code
-                next_code += 1
-            cur = k
-        emit_data(cur)
-    emit(eoi)
-    if nbits:
-        out.append(acc & 0xFF)
-    return bytes(out)
-
-
-def _gif_lzw_decode(data: bytes, mcs: int) -> bytearray:
-    """Inverse of :func:`_gif_lzw_encode`; also accepts foreign
-    streams that defer CLEAR past a full table (stops adding entries
-    at 4096 and keeps resolving, per common decoder practice)."""
-    clear = 1 << mcs
-    eoi = clear + 1
-    code_size = mcs + 1
-    roots = [bytes([i]) for i in range(clear)] + [b"", b""]
-    table = list(roots)
-    out = bytearray()
-    acc = 0
-    nbits = 0
-    pos = 0
-    prev = -1
-    n_read = eoi + 1
-    n = len(data)
-    while True:
-        while nbits < code_size:
-            if pos >= n:
-                raise ValueError("truncated GIF LZW stream")
-            acc |= data[pos] << nbits
-            pos += 1
-            nbits += 8
-        code = acc & ((1 << code_size) - 1)
-        acc >>= code_size
-        nbits -= code_size
-        if code == clear:
-            table = list(roots)
-            code_size = mcs + 1
-            n_read = eoi + 1
-            prev = -1
-            continue
-        if code == eoi:
-            return out
-        # giflib's growth contract, mirrored from the encoder: the
-        # width is driven by the per-READ count (incremented for
-        # every data code, entry added or not) — count-driven, so
-        # the final encoder emit (which adds no entry) stays in sync
-        n_read += 1
-        grow = n_read > (1 << code_size) and code_size < 12
-        if prev < 0:
-            if code >= clear:
-                raise ValueError("first LZW code after CLEAR not a root")
-            out += table[code]
-            prev = code
-            if grow:
-                code_size += 1
-            continue
-        if code < len(table):
-            entry = table[code]
-        elif code == len(table):  # KwKwK
-            entry = table[prev] + table[prev][:1]
-        else:
-            raise ValueError(f"LZW code {code} out of range")
-        out += entry
-        if len(table) < _GIF_MAX_CODE:
-            table.append(table[prev] + entry[:1])
-        if grow:
-            code_size += 1
-        prev = code
-
-
-def _gif_subblocks(data: bytes) -> bytes:
-    """Frame ``data`` into <=255-byte sub-blocks + terminator."""
-    out = bytearray()
-    for i in range(0, len(data), 255):
-        chunk = data[i : i + 255]
-        out.append(len(chunk))
-        out += chunk
-    out.append(0)
-    return bytes(out)
-
-
-def _gif_read_subblocks(payload: bytes, pos: int) -> tuple[bytes, int]:
-    """Collect sub-blocks starting at ``pos``; returns (data, next)."""
-    out = bytearray()
-    while True:
-        if pos >= len(payload):
-            raise ValueError("truncated GIF sub-blocks")
-        ln = payload[pos]
-        pos += 1
-        if ln == 0:
-            return bytes(out), pos
-        if pos + ln > len(payload):
-            raise ValueError("truncated GIF sub-block")
-        out += payload[pos : pos + ln]
-        pos += ln
-
-
-def gif_encode(
-    frames: "np.ndarray | list[np.ndarray]",
-    palette: np.ndarray,
-    *,
-    delays_cs: "list[int] | None" = None,
-    interlace: bool = False,
-    boxes: "list[tuple[int, int]] | None" = None,
-    canvas: "tuple[int, int] | None" = None,
-    transparent: "int | None" = None,
-    disposals: "list[int] | None" = None,
-    loop: int = 0,
-) -> bytes:
-    """Encode palette-index frames as a real GIF89a stream.
-
-    ``frames`` — (f, h, w) uint8 array or list of (h, w) index
-    arrays; with ``boxes`` each frame may be a sub-rectangle placed
-    at (left, top) on the logical canvas (the delta-frame layout
-    animated GIFs actually use). ``palette`` — (n<=256, 3) uint8
-    global color table (padded internally to a power of two, as the
-    LSD size field requires). Multi-frame streams get per-frame
-    Graphic Control Extensions (delay in centiseconds, disposal,
-    optional ``transparent`` index) and a NETSCAPE2.0 looping
-    extension. Deterministic byte-for-byte for identical input: the
-    LZW dictionary walk is greedy longest-match with a fixed
-    reset-at-4096 policy and no heuristics."""
-    import struct
-
-    if isinstance(frames, np.ndarray) and frames.ndim == 3:
-        frames = [frames[i] for i in range(frames.shape[0])]
-    elif isinstance(frames, np.ndarray):
-        frames = [frames]
-    assert palette.dtype == np.uint8 and palette.ndim == 2
-    assert 2 <= palette.shape[0] <= 256 and palette.shape[1] == 3
-    if canvas is None:
-        assert boxes is None, "canvas size required with boxes"
-        canvas = frames[0].shape
-    h, w = canvas
-    if boxes is None:
-        boxes = [(0, 0)] * len(frames)
-    # pad the palette to a power of two (LSD size field is 2^(k+1))
-    size = 2
-    while size < palette.shape[0]:
-        size <<= 1
-    pal = np.zeros((size, 3), dtype=np.uint8)
-    pal[: palette.shape[0]] = palette
-    size_bits = size.bit_length() - 2  # field value: size = 2^(bits+1)
-    mcs = max(2, size.bit_length() - 1)  # spec: minimum code size >= 2
-
-    out = bytearray(b"GIF89a")
-    out += struct.pack("<HH", w, h)
-    out += bytes([0x80 | (7 << 4) | size_bits, 0, 0])  # GCT flag, bg 0
-    out += pal.tobytes()
-    if len(frames) > 1:
-        out += b"\x21\xff\x0bNETSCAPE2.0"
-        out += _gif_subblocks(struct.pack("<BH", 1, loop))
-    for i, (frame, (left, top)) in enumerate(zip(frames, boxes)):
-        assert frame.dtype == np.uint8 and frame.ndim == 2
-        assert int(frame.max(initial=0)) < palette.shape[0]
-        fh, fw = frame.shape
-        assert top + fh <= h and left + fw <= w, "frame exceeds canvas"
-        delay = delays_cs[i] if delays_cs else 0
-        disposal = disposals[i] if disposals else (1 if len(frames) > 1 else 0)
-        if len(frames) > 1 or delay or transparent is not None or disposal:
-            gce_flags = (disposal & 7) << 2 | (1 if transparent is not None else 0)
-            out += b"\x21\xf9\x04" + bytes([gce_flags])
-            out += struct.pack("<H", delay)
-            out += bytes([transparent if transparent is not None else 0, 0])
-        out += b"\x2c" + struct.pack("<HHHH", left, top, fw, fh)
-        out += bytes([0x40 if interlace else 0])  # no local table
-        rows = frame[_gif_interlace_rows(fh)] if interlace else frame
-        out += bytes([mcs])
-        out += _gif_subblocks(_gif_lzw_encode(rows.tobytes(), mcs))
-    out += b"\x3b"
-    return bytes(out)
-
-
-def gif_decode(
-    payload: bytes,
-) -> tuple[np.ndarray, np.ndarray, list[dict]]:
-    """Decode a GIF87a/GIF89a stream into composited full-canvas
-    frames. Returns ``(frames, palette, meta)``: frames is a
-    (f, h, w) uint8 index array into the GLOBAL palette — each frame
-    is the visible canvas after compositing (disposal method 0/1
-    keep, 2 restore-to-background, transparency leaves the prior
-    pixel) — palette is the (n, 3) global color table, and meta has
-    one dict per frame: delay_cs, interlaced, left/top/lw/lh,
-    local_palette (frames carrying a local color table decode
-    through it and are returned as raw indices into THAT table in
-    ``meta[i]['local_indices']``, since the canvas is globally
-    indexed). Wild-file tolerances: GIF87a headers, missing GCE,
-    foreign application/comment/plain-text extensions (skipped via
-    the sub-block walk), deferred-CLEAR LZW streams."""
-    import struct
-
-    if payload[:6] not in (b"GIF87a", b"GIF89a"):
-        raise ValueError("not a GIF stream")
-    w, h = struct.unpack_from("<HH", payload, 6)
-    flags, bg, _aspect = payload[10], payload[11], payload[12]
-    pos = 13
-    palette = np.zeros((2, 3), dtype=np.uint8)
-    if flags & 0x80:
-        n = 2 << (flags & 7)
-        palette = (
-            np.frombuffer(payload, dtype=np.uint8, count=3 * n, offset=pos)
-            .reshape(n, 3)
-            .copy()
-        )
-        pos += 3 * n
-    canvas = np.full((h, w), bg if flags & 0x80 else 0, dtype=np.uint8)
-    frames: list[np.ndarray] = []
-    meta: list[dict] = []
-    delay_cs = 0
-    disposal = 0
-    transparent: "int | None" = None
-    while True:
-        if pos >= len(payload):
-            raise ValueError("GIF stream missing trailer")
-        block = payload[pos]
-        pos += 1
-        if block == 0x3B:  # trailer
-            break
-        if block == 0x21:  # extension
-            label = payload[pos]
-            pos += 1
-            data, pos = _gif_read_subblocks(payload, pos)
-            if label == 0xF9 and len(data) >= 4:
-                gce_flags = data[0]
-                disposal = (gce_flags >> 2) & 7
-                (delay_cs,) = struct.unpack_from("<H", data, 1)
-                transparent = data[3] if gce_flags & 1 else None
-            continue
-        if block != 0x2C:
-            raise ValueError(f"unknown GIF block 0x{block:02x}")
-        left, top, lw, lh = struct.unpack_from("<HHHH", payload, pos)
-        pos += 8
-        iflags = payload[pos]
-        pos += 1
-        local = None
-        if iflags & 0x80:
-            n = 2 << (iflags & 7)
-            local = (
-                np.frombuffer(payload, dtype=np.uint8, count=3 * n, offset=pos)
-                .reshape(n, 3)
-                .copy()
-            )
-            pos += 3 * n
-        mcs = payload[pos]
-        pos += 1
-        data, pos = _gif_read_subblocks(payload, pos)
-        idx = np.frombuffer(
-            bytes(_gif_lzw_decode(data, mcs))[: lw * lh],
-            dtype=np.uint8,
-        ).reshape(lh, lw)
-        if iflags & 0x40:  # interlaced: invert the row permutation
-            order = _gif_interlace_rows(lh)
-            de = np.empty_like(idx)
-            de[order] = idx
-            idx = de
-        fmeta = {
-            "delay_cs": delay_cs,
-            "interlaced": bool(iflags & 0x40),
-            "left": left,
-            "top": top,
-            "lw": lw,
-            "lh": lh,
-            "local_palette": local is not None,
-        }
-        if local is not None:
-            fmeta["local_indices"] = idx
-            fmeta["local_table"] = local
-        region = canvas[top : top + lh, left : left + lw]
-        # frames with a LOCAL color table index a different palette —
-        # compositing their indices onto the globally-indexed canvas
-        # would mix palettes (they ride in meta['local_indices'] only);
-        # the guard applies to the transparency branch too (ADVICE r6)
-        if local is None:
-            if transparent is not None:
-                mask = idx != transparent
-                region[mask] = idx[mask]
-            else:
-                region[:] = idx
-        frames.append(canvas.copy())
-        meta.append(fmeta)
-        if disposal == 2:
-            canvas[top : top + lh, left : left + lw] = bg if flags & 0x80 else 0
-        delay_cs, disposal, transparent = 0, 0, None
-    if not frames:
-        raise ValueError("GIF stream has no image blocks")
-    return np.stack(frames), palette, meta
 
 
 # ---------------------------------------------------------------------------

@@ -3480,150 +3480,10 @@ FROM nums
 """
 
 
-# q191: MP4 box-walk metadata recomputed from the generative closed
-# forms — sample-size sums via generate_series, floor-division
-# durations via //, and the stco chunk offsets pinned to the exact
-# byte layout (ftyp 28 + mdat header 8 = payload base 36; the audio
-# chunk starts right after the video chunk's bytes).
-ORACLES["q191_mp4_metadata"] = """
-WITH docs AS (
-  SELECT doc_id, 24 + doc_id % 48 AS n_vid, 50 + doc_id % 25 AS n_aud
-  FROM documents WHERE doc_id % 5 = 3
-),
-vbytes AS (
-  SELECT d.doc_id,
-         SUM(64 + (d.doc_id * 7 + j.j * 13) % 128) AS vid_total
-  FROM docs d JOIN generate_series(0, 71) j(j) ON j.j < d.n_vid
-  GROUP BY d.doc_id
-),
-abytes AS (
-  SELECT d.doc_id,
-         SUM(32 + (d.doc_id * 5 + j.j * 11) % 64) AS aud_total
-  FROM docs d JOIN generate_series(0, 74) j(j) ON j.j < d.n_aud
-  GROUP BY d.doc_id
-),
-base AS (
-  SELECT d.doc_id, d.n_vid, d.n_aud, v.vid_total, a.aud_total,
-         d.n_vid * 40 AS vid_ms,
-         (d.n_aud * 1024 * 1000) // 48000 AS aud_ms
-  FROM docs d
-  JOIN vbytes v ON v.doc_id = d.doc_id
-  JOIN abytes a ON a.doc_id = d.doc_id
-)
-SELECT doc_id AS media_id, CAST(1 AS INT) AS track_id,
-       'vide' AS handler, 'avc1' AS codec,
-       CAST(n_vid AS BIGINT) AS n_samples,
-       CAST(vid_total AS BIGINT) AS total_bytes,
-       CAST(vid_ms AS BIGINT) AS duration_ms,
-       CAST(GREATEST(vid_ms, aud_ms) AS BIGINT) AS movie_ms,
-       CAST(320 + (doc_id % 4) * 16 AS INT) AS width,
-       CAST(240 + (doc_id % 3) * 16 AS INT) AS height,
-       CAST(36 AS BIGINT) AS chunk_off
-FROM base
-UNION ALL
-SELECT doc_id, CAST(2 AS INT), 'soun', 'mp4a',
-       CAST(n_aud AS BIGINT), CAST(aud_total AS BIGINT),
-       CAST(aud_ms AS BIGINT),
-       CAST(GREATEST(vid_ms, aud_ms) AS BIGINT),
-       CAST(0 AS INT), CAST(0 AS INT),
-       CAST(36 + vid_total AS BIGINT)
-FROM base
-"""
-
-
 # q192: stream-over-slices == batch semantic_dedup (the parity
 # contract of tests/test_streaming_semdedup.py), so the oracle IS
 # q185's EXISTS oracle.
 ORACLES["q192_streaming_semdedup"] = ORACLES["q185_semantic_dedup"]
-
-
-# q193: fMP4 fragment-accumulation arithmetic from the q191 closed
-# forms — n_frags = ceil(max(n_vid, n_aud) / 8) shared by both
-# tracks; totals/durations identical to the progressive layout
-# (fragmentation must not change them).
-ORACLES["q193_fmp4_fragments"] = """
-WITH docs AS (
-  SELECT doc_id, 24 + doc_id % 48 AS n_vid, 50 + doc_id % 25 AS n_aud
-  FROM documents WHERE doc_id % 5 = 4
-),
-vbytes AS (
-  SELECT d.doc_id,
-         SUM(64 + (d.doc_id * 7 + j.j * 13) % 128) AS vid_total
-  FROM docs d JOIN generate_series(0, 71) j(j) ON j.j < d.n_vid
-  GROUP BY d.doc_id
-),
-abytes AS (
-  SELECT d.doc_id,
-         SUM(32 + (d.doc_id * 5 + j.j * 11) % 64) AS aud_total
-  FROM docs d JOIN generate_series(0, 74) j(j) ON j.j < d.n_aud
-  GROUP BY d.doc_id
-),
-base AS (
-  SELECT d.doc_id, d.n_vid, d.n_aud, v.vid_total, a.aud_total,
-         (GREATEST(d.n_vid, d.n_aud) + 7) // 8 AS n_frags
-  FROM docs d
-  JOIN vbytes v ON v.doc_id = d.doc_id
-  JOIN abytes a ON a.doc_id = d.doc_id
-)
-SELECT doc_id AS media_id, CAST(1 AS INT) AS track_id,
-       'vide' AS handler, 'avc1' AS codec,
-       CAST(n_vid AS BIGINT) AS n_samples,
-       CAST(vid_total AS BIGINT) AS total_bytes,
-       CAST(n_vid * 40 AS BIGINT) AS duration_ms,
-       CAST(n_frags AS INT) AS n_frags
-FROM base
-UNION ALL
-SELECT doc_id, CAST(2 AS INT), 'soun', 'mp4a',
-       CAST(n_aud AS BIGINT), CAST(aud_total AS BIGINT),
-       CAST((n_aud * 1024 * 1000) // 48000 AS BIGINT),
-       CAST(n_frags AS INT)
-FROM base
-"""
-
-
-# q194: GIF is lossless, so the oracle recomputes every decoded RGB
-# byte from the closed forms — anim frame f pixel p channel c derives
-# from idx=(doc*31+f*7+p)%64 through the same 64-entry palette
-# formula as q189; twocolor from idx=(doc+p)%2 through {black,white}.
-# wsum_val weights by the flattened position p*3+c, making row
-# permutations (a wrong deinterlace) value-visible.
-ORACLES["q194_gif_codec"] = """
-WITH docs AS (SELECT doc_id FROM documents WHERE doc_id % 7 = 3),
-anim AS (
-  SELECT d.doc_id AS media_id, 'anim' AS variant, f.f AS frame_idx,
-         tp.p * 3 + tc.c AS pos,
-         CASE tc.c
-           WHEN 0 THEN (((d.doc_id * 31 + f.f * 7 + tp.p) % 64) * 5 + 1) % 256
-           WHEN 1 THEN (((d.doc_id * 31 + f.f * 7 + tp.p) % 64) * 11 + 3) % 256
-           ELSE (((d.doc_id * 31 + f.f * 7 + tp.p) % 64) * 23 + 7) % 256
-         END AS v
-  FROM docs d
-  CROSS JOIN generate_series(0, 2) f(f)
-  CROSS JOIN generate_series(0, 191) tp(p)
-  CROSS JOIN generate_series(0, 2) tc(c)
-),
-il AS (
-  SELECT media_id, 'interlaced' AS variant, frame_idx, pos, v
-  FROM anim WHERE frame_idx = 0
-),
-bw AS (
-  SELECT d.doc_id AS media_id, 'twocolor' AS variant, 0 AS frame_idx,
-         tp.p * 3 + tc.c AS pos,
-         CASE WHEN (d.doc_id + tp.p) % 2 = 1 THEN 255 ELSE 0 END AS v
-  FROM docs d
-  CROSS JOIN generate_series(0, 191) tp(p)
-  CROSS JOIN generate_series(0, 2) tc(c)
-),
-s AS (SELECT * FROM anim UNION ALL SELECT * FROM il
-      UNION ALL SELECT * FROM bw)
-SELECT media_id, variant, CAST(frame_idx AS INT) AS frame_idx,
-       COUNT(*) AS n_vals,
-       CAST(SUM(v) AS BIGINT) AS sum_val,
-       CAST(SUM(CAST(pos AS BIGINT) * v) AS BIGINT) AS wsum_val,
-       CAST(MIN(v) AS INT) AS min_val,
-       CAST(MAX(v) AS INT) AS max_val
-FROM s GROUP BY 1, 2, 3
-"""
 
 
 # q195: FLAC is lossless, so the oracle recomputes every decoded
@@ -3956,43 +3816,6 @@ SELECT doc_id AS media_id,
        TRUE AS reorder_exact,
        TRUE AS err_ok
 FROM documents WHERE doc_id % 7 = 3
-"""
-
-
-# q205: q196's facts on 256-doc shards with odd shards as .warc.zst —
-# compression recomputed from shard parity, slice-fetchability pinned
-# TRUE per record, md5-exact payload recovery through BOTH codecs.
-ORACLES["q205_warc_zstd_ingest"] = """
-SELECT doc_id,
-       CAST(doc_id // 256 AS INT) AS shard,
-       CASE WHEN (doc_id // 256) % 2 = 1 THEN 'zstd' ELSE 'gzip' END
-           AS compression,
-       CAST(ROW_NUMBER() OVER (
-            PARTITION BY doc_id // 256 ORDER BY doc_id
-       ) AS BIGINT) AS rec_index,
-       CAST(octet_length(encode(text)) AS BIGINT) AS payload_len,
-       md5(text) AS payload_md5,
-       CAST(CASE WHEN doc_id % 10 = 7 THEN 404 ELSE 200 END AS INT)
-           AS http_status,
-       TRUE AS slice_fetch_ok
-FROM documents
-"""
-
-
-# q206: the entropy-coded zstd round trip is LOSSLESS, so the oracle
-# recomputes the decoded md5 from the table text; entropy_smaller,
-# has_sequences (round 8: >=256-byte docs must decode with >=1 real
-# FSE-coded LZ sequence — longest sequence-free doc is 77 bytes) and
-# corrupt_detected are pinned TRUE (threshold 256 has corpus-measured
-# margin: the longest non-shrinking doc is 168 bytes).
-ORACLES["q206_zstd_roundtrip"] = """
-SELECT doc_id AS media_id,
-       CAST(octet_length(encode(text)) AS BIGINT) AS orig_len,
-       md5(text) AS roundtrip_md5,
-       TRUE AS entropy_smaller,
-       TRUE AS has_sequences,
-       TRUE AS corrupt_detected
-FROM documents WHERE doc_id % 7 = 5
 """
 
 
@@ -4330,23 +4153,6 @@ FROM documents WHERE doc_id % 7 = 2
 """
 
 
-# q220: arithmetic JPEG pins are Huffman-vs-arithmetic pixel
-# equalities on the SAME quantized coefficients plus by-construction
-# stream/size booleans — TRUE by contract, like q212's (the engines
-# only have to agree on the audited doc slice).
-ORACLES["q220_jpeg_arithmetic"] = """
-SELECT doc_id AS media_id,
-       CAST(16 AS INT) AS width,
-       CAST(12 AS INT) AS height,
-       TRUE AS seq_match,
-       TRUE AS prog_match,
-       TRUE AS ext12_match,
-       TRUE AS sof9_stream,
-       TRUE AS arith_smaller
-FROM documents WHERE doc_id % 11 = 6
-"""
-
-
 # q223: int8 quantization is floor over IEEE double ops and the
 # scores are exact int64 (ranking key = one correctly-rounded
 # divide+sqrt), so DuckDB recomputes the quantized vectors, both
@@ -4649,21 +4455,6 @@ SELECT CAST(256 AS INT) AS k,
           - exact_union) * 256
        <= 25 * exact_union * exact_union AS union_err_ok
 FROM th, cnt, ex
-"""
-
-
-# q225: arithmetic lossless is byte-exact by definition and the
-# stream/size pins are by construction — TRUE like q212's.
-ORACLES["q225_jpeg_arith_lossless"] = """
-SELECT doc_id AS media_id,
-       CAST(16 AS INT) AS width,
-       CAST(12 AS INT) AS height,
-       TRUE AS rt8_exact,
-       TRUE AS rt12_exact,
-       TRUE AS rt16_exact,
-       TRUE AS sof11_stream,
-       TRUE AS arith_smaller
-FROM documents WHERE doc_id % 11 = 7
 """
 
 

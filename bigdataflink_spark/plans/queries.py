@@ -5393,93 +5393,6 @@ def q190_tvd_drift_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return check_snapshot_drift(spark, table, rules, base_version=0)
 
 
-def q191_mp4_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MP4 / ISO-BMFF container metadata extraction (extension;
-    round-4 task #4 — the last media family with NO container-level
-    support: operators/multimodal.py now carries a generative
-    ftyp/mdat/moov builder and a recursive box-walk parser, frame
-    decode staying honestly gated on ffmpeg): each sampled document
-    gets a two-track MP4 (avc1 video + mp4a audio) built from closed
-    forms — n_vid = 24 + id%48 samples of size 64 + (id·7+j·13)%128
-    at 25 fps, n_aud = 50 + id%25 samples of size 32 + (id·5+j·11)%64
-    at 48 kHz/1024-sample cadence — then the parser walks
-    mvhd/tkhd/mdhd/hdlr/stsd/stts/stsz/stco and emits one row per
-    track: ids, handler, codec fourcc, exact sample counts and byte
-    totals, media- and movie-level floor-division durations, and the
-    ABSOLUTE stco chunk offset, which the oracle pins to the
-    closed-form file layout (ftyp 28 bytes + mdat header 8 → payload
-    base 36; audio chunk starts at 36 + total video bytes): one byte
-    of drift anywhere in the box tree moves an offset or a total and
-    fails the value hash. Audited on the doc_id%5==3 fifth (disjoint
-    from q187/q188/q189's fifths). One Arrow map stage: zero
-    shuffles, zero joins."""
-    import pandas as pd_
-
-    from bigdataflink_spark.operators.multimodal import mp4_build, mp4_scan
-
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 5 == 3)
-
-    def _batches(it):
-        import numpy as np_
-
-        cols = (
-            "media_id", "track_id", "handler", "codec", "n_samples",
-            "total_bytes", "duration_ms", "movie_ms", "width", "height",
-            "chunk_off",
-        )
-        for pdf in it:
-            rows = {k: [] for k in cols}
-            for i in pdf["doc_id"]:
-                i = int(i)
-                n_vid = 24 + i % 48
-                n_aud = 50 + i % 25
-                tracks = [
-                    {
-                        "handler": "vide",
-                        "codec": "avc1",
-                        "timescale": 1000,
-                        "sample_delta": 40,
-                        "sample_sizes": [
-                            64 + (i * 7 + j * 13) % 128 for j in range(n_vid)
-                        ],
-                        "width": 320 + (i % 4) * 16,
-                        "height": 240 + (i % 3) * 16,
-                    },
-                    {
-                        "handler": "soun",
-                        "codec": "mp4a",
-                        "timescale": 48000,
-                        "sample_delta": 1024,
-                        "sample_sizes": [
-                            32 + (i * 5 + j * 11) % 64 for j in range(n_aud)
-                        ],
-                    },
-                ]
-                meta = mp4_scan(mp4_build(tracks, movie_timescale=1000))
-                for t in meta["tracks"]:
-                    rows["media_id"].append(i)
-                    rows["track_id"].append(t["track_id"])
-                    rows["handler"].append(t["handler"])
-                    rows["codec"].append(t["codec"])
-                    rows["n_samples"].append(t["n_samples"])
-                    rows["total_bytes"].append(t["total_sample_bytes"])
-                    rows["duration_ms"].append(t["duration_ms"])
-                    rows["movie_ms"].append(meta["duration_ms"])
-                    rows["width"].append(t["width"])
-                    rows["height"].append(t["height"])
-                    rows["chunk_off"].append(t["chunk_offsets"][0])
-            yield pd_.DataFrame(rows)
-
-    return docs.select("doc_id").mapInPandas(
-        _batches,
-        schema=(
-            "media_id long, track_id int, handler string, codec string, "
-            "n_samples long, total_bytes long, duration_ms long, "
-            "movie_ms long, width int, height int, chunk_off long"
-        ),
-    )
-
-
 def q192_streaming_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Online SemDeDup (extension; streaming/semdedup.py — round-4
     task #3: q185 was batch-only while MinHash near-dup had a
@@ -5512,182 +5425,6 @@ def q192_streaming_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     for p in parts[1:]:
         out = out.unionByName(p)
     return out
-
-
-def q193_fmp4_fragments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fragmented-MP4 (fMP4/CMAF — the DASH/HLS wire shape) metadata
-    walk (extension; completes the ISO-BMFF surface beyond q191's
-    progressive layout): the same closed-form two-track recipe as
-    q191, but laid out as empty-moov + mvex/trex + moof/traf/trun
-    fragments of 8 samples (``mp4_build_fragmented``), so the sample
-    counts and byte totals exist ONLY in the per-fragment trun tables
-    and the parser must accumulate them across fragments. Output per
-    track: exact accumulated sample count and byte total, media
-    duration, and the fragment count ceil(max_samples/8) shared by
-    both tracks. The byte-exact moof-relative chunk-offset contract
-    is pinned by the unit test (offsets resolve to the true sample
-    filler bytes); this query pins the accumulation arithmetic
-    against the closed forms. Audited on the doc_id%5==4 fifth — the
-    five codec/container contracts (q187/q188/q189/q191/q193) now
-    cover ALL five disjoint fifths of the corpus per round. One
-    Arrow map stage: zero shuffles, zero joins."""
-    import pandas as pd_
-
-    from bigdataflink_spark.operators.multimodal import (
-        mp4_build_fragmented,
-        mp4_scan,
-    )
-
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 5 == 4)
-
-    def _batches(it):
-        cols = (
-            "media_id", "track_id", "handler", "codec", "n_samples",
-            "total_bytes", "duration_ms", "n_frags",
-        )
-        for pdf in it:
-            rows = {k: [] for k in cols}
-            for i in pdf["doc_id"]:
-                i = int(i)
-                n_vid = 24 + i % 48
-                n_aud = 50 + i % 25
-                tracks = [
-                    {
-                        "handler": "vide",
-                        "codec": "avc1",
-                        "timescale": 1000,
-                        "sample_delta": 40,
-                        "sample_sizes": [
-                            64 + (i * 7 + j * 13) % 128 for j in range(n_vid)
-                        ],
-                        "width": 320 + (i % 4) * 16,
-                        "height": 240 + (i % 3) * 16,
-                    },
-                    {
-                        "handler": "soun",
-                        "codec": "mp4a",
-                        "timescale": 48000,
-                        "sample_delta": 1024,
-                        "sample_sizes": [
-                            32 + (i * 5 + j * 11) % 64 for j in range(n_aud)
-                        ],
-                    },
-                ]
-                meta = mp4_scan(
-                    mp4_build_fragmented(tracks, samples_per_fragment=8)
-                )
-                for t in meta["tracks"]:
-                    rows["media_id"].append(i)
-                    rows["track_id"].append(t["track_id"])
-                    rows["handler"].append(t["handler"])
-                    rows["codec"].append(t["codec"])
-                    rows["n_samples"].append(t["n_samples"])
-                    rows["total_bytes"].append(t["total_sample_bytes"])
-                    rows["duration_ms"].append(t["duration_ms"])
-                    rows["n_frags"].append(meta["n_fragments"])
-            yield pd_.DataFrame(rows)
-
-    return docs.select("doc_id").mapInPandas(
-        _batches,
-        schema=(
-            "media_id long, track_id int, handler string, codec string, "
-            "n_samples long, total_bytes long, duration_ms long, "
-            "n_frags int"
-        ),
-    )
-
-
-def q194_gif_codec(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GIF89a round-trip contract (extension; completes the lossless
-    image family beside PNG q183/q189 — GIF is the palette+LZW wire
-    shape wild image corpora actually contain): each sampled
-    document's closed-form rasters are encoded AND decoded through
-    the real codec (``operators/multimodal.py`` GIF section:
-    variable-code-size LZW with growth/reset, sub-block framing,
-    NETSCAPE looping, GCE delays) in three variants — a 3-frame
-    ANIMATION (multi-frame container path), a 4-pass row-INTERLACED
-    single frame (spec appendix E permutation), and a TWOCOLOR frame
-    (pins the spec's minimum-code-size >= 2 floor for 2-entry
-    palettes) — then exact integer stats over every palette-expanded
-    RGB sample. GIF is lossless, so the oracle recomputes every
-    decoded byte from the closed form; ``wsum_val`` weights each
-    value by its flattened position, so even a stats-invariant row
-    PERMUTATION (a wrong deinterlace) fails the value hash. Audited
-    on the deterministic doc_id%7==3 seventh. One Arrow map stage:
-    zero shuffles, zero joins — at 100 TB the encode half is
-    replaced by a binary-column scan and decode parallelizes
-    per-file."""
-    import pandas as pd_
-
-    from bigdataflink_spark.operators.multimodal import (
-        gif_decode,
-        gif_encode,
-    )
-
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 7 == 3)
-    width, height = 16, 12
-
-    def _batches(it):
-        import numpy as np
-
-        js = np.arange(64, dtype=np.int64)
-        pal = (
-            np.stack(
-                [(js * 5 + 1) % 256, (js * 11 + 3) % 256, (js * 23 + 7) % 256],
-                axis=1,
-            ).astype(np.uint8)
-        )
-        pal2 = np.array([[0, 0, 0], [255, 255, 255]], dtype=np.uint8)
-        cols = (
-            "media_id", "variant", "frame_idx", "n_vals", "sum_val",
-            "wsum_val", "min_val", "max_val",
-        )
-        ks = np.arange(width * height, dtype=np.int64)
-        for pdf in it:
-            rows = {k: [] for k in cols}
-
-            def emit(mid, variant, frames_idx, palette):
-                rgb = palette[frames_idx].astype(np.int64)
-                flat = rgb.reshape(rgb.shape[0], -1)
-                pos = np.arange(flat.shape[1], dtype=np.int64)
-                for f in range(flat.shape[0]):
-                    rows["media_id"].append(mid)
-                    rows["variant"].append(variant)
-                    rows["frame_idx"].append(f)
-                    rows["n_vals"].append(int(flat.shape[1]))
-                    rows["sum_val"].append(int(flat[f].sum()))
-                    rows["wsum_val"].append(int((flat[f] * pos).sum()))
-                    rows["min_val"].append(int(flat[f].min()))
-                    rows["max_val"].append(int(flat[f].max()))
-
-            for i in pdf["doc_id"]:
-                i = int(i)
-                anim = [
-                    ((i * 31 + f * 7 + ks) % 64)
-                    .astype(np.uint8)
-                    .reshape(height, width)
-                    for f in range(3)
-                ]
-                dec, dpal, _ = gif_decode(
-                    gif_encode(anim, pal, delays_cs=[4, 4, 4])
-                )
-                emit(i, "anim", dec, dpal[:64])
-                dec, dpal, _ = gif_decode(
-                    gif_encode(anim[0], pal, interlace=True)
-                )
-                emit(i, "interlaced", dec, dpal[:64])
-                bw = ((i + ks) % 2).astype(np.uint8).reshape(height, width)
-                dec, dpal, _ = gif_decode(gif_encode(bw, pal2))
-                emit(i, "twocolor", dec, dpal[:2])
-            yield pd_.DataFrame(rows)
-
-    return docs.select("doc_id").mapInPandas(
-        _batches,
-        schema=(
-            "media_id long, variant string, frame_idx int, n_vals long, "
-            "sum_val long, wsum_val long, min_val int, max_val int"
-        ),
-    )
 
 
 def q195_flac_codec(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6482,13 +6219,7 @@ def q196_warc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             uri = f"https://corpus.example/doc/{doc_id}"
             recs.append((uri, status, extra, text.encode("utf-8")))
-        # mixed-compression corpus (round 7): odd shards ship as
-        # .warc.zst (Common Crawl publishes both; the reader sniffs
-        # per-shard magic). Degenerate to all-gzip below 2 shards —
-        # q205 pins the zstd path at every scale with smaller shards.
-        blob = warc_build_shard(
-            recs, shard, compression="zstd" if shard % 2 == 1 else "gzip"
-        )
+        blob = warc_build_shard(recs, shard)
 
         from bigdataflink_spark.sources.warc import parse_http_response
 
@@ -6519,94 +6250,6 @@ def q196_warc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         schema=(
             "doc_id long, shard int, rec_index long, payload_len long, "
             "payload_md5 string, http_status int, n_http_headers long"
-        ),
-    )
-
-
-def q205_warc_zstd_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mixed gzip/zstd WARC corpus ingest (extension; round-6 verdict
-    "What's missing #5" — Common Crawl ships ``.warc.zst`` beside
-    ``.warc.gz``, and a reader that can't open zstd skips a growing
-    corpus slice). The corpus packs into 256-doc shards — small
-    enough that BOTH compressions exist at every test scale — odd
-    shards as one-zstd-frame-per-record streams built by the
-    spec-built RFC 8878 store encoder (``operators/zstd.py``: real
-    frames, ``unzstd``-interop pinned by tests), even shards as the
-    q196 gzip layout; ``iter_warc_records`` sniffs the per-shard
-    magic like an ingest over a mixed bucket. Facts mirror q196's
-    (md5-exact payload recovery, record order, HTTP parse) plus the
-    ``compression`` actually DETECTED from the shard magic and
-    ``slice_fetch_ok`` — every record is RE-PARSED from its bare
-    ``blob[offset:offset+length]`` slice and must yield the same
-    payload bytes, which is the (offset, length)-fetchability
-    property that makes both layouts work at 100 TB, verified per
-    record per compression. Same scale shape as q196: one keyed
-    shuffle, shard count grows with the corpus, zero joins."""
-    import pandas as pd_
-
-    from bigdataflink_spark.sources.warc import (
-        iter_warc_records,
-        warc_build_shard,
-    )
-
-    docs = (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .withColumn("shard", F.expr("CAST(doc_id DIV 256 AS INT)"))
-    )
-
-    def _shard(key, pdf):
-        import hashlib
-
-        shard = int(key[0])
-        comp = "zstd" if shard % 2 == 1 else "gzip"
-        recs = []
-        for doc_id, text in sorted(
-            zip(pdf["doc_id"], pdf["text"]), key=lambda t: int(t[0])
-        ):
-            doc_id = int(doc_id)
-            status = 404 if doc_id % 10 == 7 else 200
-            extra = (
-                [("X-Doc-Parity", "even")] if doc_id % 2 == 0 else []
-            )
-            uri = f"https://corpus.example/doc/{doc_id}"
-            recs.append((uri, status, extra, text.encode("utf-8")))
-        blob = warc_build_shard(recs, shard, compression=comp)
-
-        from bigdataflink_spark.sources.warc import parse_http_response
-
-        detected = "gzip" if blob[:2] == b"\x1f\x8b" else "zstd"
-        rows = {k: [] for k in (
-            "doc_id", "shard", "compression", "rec_index",
-            "payload_len", "payload_md5", "http_status", "slice_fetch_ok",
-        )}
-        idx = 0
-        for off, mlen, rec in iter_warc_records(blob):
-            if rec["type"] != "response":
-                continue
-            idx += 1
-            status, headers, payload = parse_http_response(rec["body"])
-            uri = rec["headers"]["warc-target-uri"]
-            # the property the layout exists for: the bare slice
-            # alone re-parses to the identical record
-            sliced = next(iter_warc_records(blob[off:off + mlen]))[2]
-            _, _, spay = parse_http_response(sliced["body"])
-            rows["doc_id"].append(int(uri.rsplit("/", 1)[1]))
-            rows["shard"].append(shard)
-            rows["compression"].append(detected)
-            rows["rec_index"].append(idx)
-            rows["payload_len"].append(len(payload))
-            rows["payload_md5"].append(hashlib.md5(payload).hexdigest())
-            rows["http_status"].append(status)
-            rows["slice_fetch_ok"].append(bool(spay == payload))
-        return pd_.DataFrame(rows)
-
-    return docs.groupBy("shard").applyInPandas(
-        _shard,
-        schema=(
-            "doc_id long, shard int, compression string, rec_index long, "
-            "payload_len long, payload_md5 string, http_status int, "
-            "slice_fetch_ok boolean"
         ),
     )
 
@@ -6988,87 +6631,6 @@ def q207_png_subbyte(spark: SparkSession, sf_dir: str) -> DataFrame:
         schema=(
             "media_id long, profile string, depth int, n_vals long, "
             "sum_val long, min_val int, max_val int"
-        ),
-    )
-
-
-def q206_zstd_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Entropy-coded zstd round-trip contract (extension; completes
-    the RFC 8878 codec story opened by q205's framing): each sampled
-    document's text is compressed by the REAL entropy encoder
-    (``operators/zstd.py::zstd_compress``: per-block choice of
-    Huffman-coded literals — canonical tree shipped as direct 4-bit
-    weights — vs RLE vs raw; unzstd-interop pinned by tests) and
-    decoded back through the full FSE/Huffman decode path.
-
-    Contract columns, all oracle-recomputable: ``roundtrip_md5``
-    pins byte-exact recovery THROUGH the entropy tier (DuckDB
-    md5(text)); ``entropy_smaller`` pins that documents of >= 256
-    bytes genuinely shrink (the corpus-measured safe threshold — the
-    worst non-shrinking doc is 168 bytes; an encoder that silently
-    fell back to raw blocks everywhere would flip it);
-    ``has_sequences`` (round 8 — the LZ-tier pin) counts the decoded
-    frame's FSE-coded sequences FROM THE BYTES
-    (``zstd_decompress(stats=...)``) and pins that >= 256-byte docs
-    carry at least one real LZ match (corpus-measured: the longest
-    sequence-free doc across sf0.001/0.01/0.1 is 77 bytes — an
-    encoder that quietly dropped to Huffman-only blocks would flip
-    it); ``corrupt_detected`` flips one payload byte mid-frame and
-    pins that decode RAISES (XXH64 checksum or structural
-    validation) — wrong-bytes-silently is the failure mode a
-    checksum exists for. Audited on the deterministic doc_id%7==5
-    slice (~14%; declared, mirrored by the oracle). One fan-out
-    Arrow map, zero joins."""
-    import pandas as pd_
-
-    from bigdataflink_spark.operators.zstd import (
-        zstd_compress,
-        zstd_decompress,
-    )
-
-    docs = _t(spark, sf_dir, "documents").filter(
-        F.col("doc_id") % 7 == 5
-    ).select("doc_id", "text")
-
-    def _batches(it):
-        import hashlib
-
-        for pdf in it:
-            rows = {k: [] for k in (
-                "media_id", "orig_len", "roundtrip_md5",
-                "entropy_smaller", "has_sequences", "corrupt_detected",
-            )}
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                raw = str(text).encode("utf-8")
-                frame = zstd_compress(raw)
-                stats: dict = {}
-                back = zstd_decompress(frame, stats=stats)
-                bad = bytearray(frame)
-                bad[len(bad) // 2] ^= 0xFF
-                try:
-                    ok = zstd_decompress(bytes(bad)) == raw
-                    detected = not ok  # silent wrong bytes = failure
-                except (ValueError, NotImplementedError):
-                    detected = True
-                rows["media_id"].append(int(doc_id))
-                rows["orig_len"].append(len(raw))
-                rows["roundtrip_md5"].append(hashlib.md5(back).hexdigest())
-                rows["entropy_smaller"].append(
-                    bool(len(raw) < 256 or len(frame) < len(raw))
-                )
-                rows["has_sequences"].append(
-                    bool(len(raw) < 256 or stats.get("sequences", 0) > 0)
-                )
-                rows["corrupt_detected"].append(bool(detected))
-            yield pd_.DataFrame(rows)
-
-    fanout = spark.sparkContext.defaultParallelism
-    return docs.repartition(fanout).mapInPandas(
-        _batches,
-        schema=(
-            "media_id long, orig_len long, roundtrip_md5 string, "
-            "entropy_smaller boolean, has_sequences boolean, "
-            "corrupt_detected boolean"
         ),
     )
 
@@ -7703,117 +7265,6 @@ def q219_streaming_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q220_jpeg_arithmetic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Arithmetic-coded JPEG contract (SOF9/SOF10, T.81 Annex D QM
-    coder — round 10, VERDICT r9 "Next round #5": the last DCT JPEG
-    entropy profile the decoder gated on). Per sampled doc, three
-    signals run the full encode→decode loop through
-    operators/jpeg_arith.py:
-
-    * ``seq_match`` — an 8-bit RGB image through SOF9 arithmetic
-      decodes to pixels IDENTICAL to the same image through SOF0
-      Huffman at the same quality: the entropy layers share the DCT
-      front half, so any QM-coder, statistical-model, stuffing or
-      carry slip flips the boolean (the strongest pin available
-      without an arithmetic-capable external decoder — interop is
-      additionally marker-gated on djpeg in tests/test_jpeg_arith.py,
-      the ffprobe pattern).
-    * ``prog_match`` — the same image through SOF10 progressive
-      arithmetic (successive approximation, DC+AC first/refine scans,
-      restart markers every 4 data units) equals the SOF9 pixels.
-    * ``ext12_match`` — a 12-bit grayscale through SOF9 equals the
-      SOF1 Huffman extended-sequential decode (uint16 out).
-    * ``sof9_stream`` — marker-structure pin from the bytes via the
-      real segment walk: SOF9 + DAC present, NO DHT and no Huffman
-      SOFs in an arithmetic stream.
-    * ``arith_smaller`` — the QM coder's adaptive binary estimation
-      must beat static Annex K Huffman on the smooth gradient; a
-      coder that round-trips but estimates nothing fails it.
-
-    Audited on the deterministic doc_id%11==6 slice (disjoint from
-    the %7 codec slices; declared, mirrored by the oracle). One Arrow
-    map stage: zero shuffles, zero joins."""
-    import pandas as pd_
-
-    from bigdataflink_spark.operators.jpeg_arith import (
-        jpeg_encode_arithmetic,
-    )
-    from bigdataflink_spark.operators.multimodal import (
-        jpeg_decode,
-        jpeg_encode,
-        jpeg_encode_extended,
-        jpeg_markers,
-    )
-
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 11 == 6)
-    width, height = 16, 12
-
-    def _batches(it):
-        import numpy as np
-
-        n = width * height
-        ks = np.arange(n, dtype=np.int64)
-        cols = ("media_id", "width", "height", "seq_match",
-                "prog_match", "ext12_match", "sof9_stream",
-                "arith_smaller")
-        for pdf in it:
-            rows = {k: [] for k in cols}
-            for i in pdf["doc_id"]:
-                i = int(i)
-                base = (i * 7 + ks // width * 3 + ks % width * 5) % 256
-                rgb = np.stack(
-                    [base, (base + 31) % 256, (base + 67) % 256],
-                    axis=-1,
-                ).astype(np.uint8).reshape(height, width, 3)
-                hb = jpeg_encode(rgb, quality=80)
-                ab = jpeg_encode_arithmetic(rgb, quality=80)
-                pb = jpeg_encode_arithmetic(
-                    rgb, quality=80, progressive=True, restart_interval=4
-                )
-                da = jpeg_decode(ab)
-                seq_match = bool(np.array_equal(jpeg_decode(hb), da))
-                prog_match = bool(np.array_equal(da, jpeg_decode(pb)))
-                g12 = (((i * 31 + ks) * 29) % 4096).astype(
-                    np.uint16
-                ).reshape(height, width)
-                ext12_match = bool(
-                    np.array_equal(
-                        jpeg_decode(
-                            jpeg_encode_extended(g12, precision=12)
-                        ),
-                        jpeg_decode(
-                            jpeg_encode_arithmetic(g12, precision=12)
-                        ),
-                    )
-                )
-                codes = [m for m, _ in jpeg_markers(ab)]
-                stream_ok = (
-                    0xC9 in codes
-                    and 0xCC in codes
-                    and 0xC4 not in codes
-                    and not {0xC0, 0xC1, 0xC2, 0xC3} & set(codes)
-                )
-                rows["media_id"].append(i)
-                rows["width"].append(width)
-                rows["height"].append(height)
-                rows["seq_match"].append(seq_match)
-                rows["prog_match"].append(prog_match)
-                rows["ext12_match"].append(ext12_match)
-                rows["sof9_stream"].append(bool(stream_ok))
-                rows["arith_smaller"].append(bool(len(ab) < len(hb)))
-            yield pd_.DataFrame(rows)
-
-    fanout = spark.sparkContext.defaultParallelism
-    return docs.select("doc_id").repartition(fanout).mapInPandas(
-        _batches,
-        schema=(
-            "media_id long, width int, height int, seq_match boolean, "
-            "prog_match boolean, ext12_match boolean, "
-            "sof9_stream boolean, arith_smaller boolean"
-        ),
-    )
-
-
 def q222_streaming_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming quantile sketch (extension; streaming/quantsketch.py
     — the LAST member of the sketch family without a streaming twin:
@@ -8015,131 +7466,6 @@ def q224_pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         "top1_id",
         "top1_cos",
         (F.col("hit_count") >= 3).alias("recall_ok"),
-    )
-
-
-def q225_jpeg_arith_lossless(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Arithmetic LOSSLESS JPEG contract (SOF11 — round 10, the last
-    non-differential JPEG profile: T.81 Annex H prediction with the
-    H.1.2.2 conditioned QM difference model, operators/
-    jpeg_arith.py::jpeg_encode_lossless_arith). Per sampled doc the
-    q212 signal set runs the full encode→decode loop:
-
-    * byte-EXACT round trips (lossless = equality): 8-bit RGB
-      predictor 4, 12-bit gray predictor 7, 16-bit gray predictor 1
-      with restart markers — one slip in the coder, the conditioning
-      contexts, or the shared predictors flips a boolean;
-    * ``sof11_stream`` pins the marker structure from the bytes (SOF11
-      + DAC present; NO DHT, NO DQT — an arithmetic lossless stream
-      carries neither Huffman nor quantization tables) and the SOS
-      predictor byte;
-    * ``arith_smaller`` pins that 2-D difference conditioning beats
-      the Huffman twin's per-image OPTIMAL tables on predictable
-      signal (measured ~4× on the gradient) — the estimator doing
-      real work, not just round-tripping.
-
-    No external SOF11 decoder exists anywhere (libjpeg never
-    implemented it), so unlike q220 there is no gated differential;
-    byte equality + the 158-bin stats-area structure matching T.81's
-    published size are the available pins, stated honestly. Audited
-    on the deterministic doc_id%11==7 slice. One Arrow map stage:
-    zero shuffles, zero joins."""
-    import pandas as pd_
-
-    from bigdataflink_spark.operators.jpeg_arith import (
-        jpeg_encode_lossless_arith,
-    )
-    from bigdataflink_spark.operators.multimodal import (
-        jpeg_decode,
-        jpeg_encode_lossless,
-        jpeg_markers,
-    )
-
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 11 == 7)
-    width, height = 16, 12
-
-    def _batches(it):
-        import numpy as np
-
-        n = width * height
-        ks = np.arange(n, dtype=np.int64)
-        cols = ("media_id", "width", "height", "rt8_exact",
-                "rt12_exact", "rt16_exact", "sof11_stream",
-                "arith_smaller")
-        for pdf in it:
-            rows = {k: [] for k in cols}
-            for i in pdf["doc_id"]:
-                i = int(i)
-                base = (i * 7 + ks // width * 3 + ks % width * 5) % 256
-                rgb = np.stack(
-                    [base, (base + 31) % 256, (base + 67) % 256],
-                    axis=-1,
-                ).astype(np.uint8).reshape(height, width, 3)
-                blob8 = jpeg_encode_lossless_arith(rgb, predictor=4)
-                dec8 = jpeg_decode(blob8)
-                g12 = (((i * 31 + ks) * 16) % 4096).astype(
-                    np.uint16
-                ).reshape(height, width)
-                dec12 = jpeg_decode(
-                    jpeg_encode_lossless_arith(
-                        g12, precision=12, predictor=7
-                    )
-                )
-                g16 = ((i * 131 + ks * 257) % 65536).astype(
-                    np.uint16
-                ).reshape(height, width)
-                dec16 = jpeg_decode(
-                    jpeg_encode_lossless_arith(
-                        g16, precision=16, predictor=1,
-                        restart_interval=40,
-                    )
-                )
-                marks = jpeg_markers(blob8)
-                codes = [m for m, _ in marks]
-                sos_at = next(o for m, o in marks if m == 0xDA)
-                ns = blob8[sos_at + 4]
-                stream_ok = (
-                    0xCB in codes
-                    and 0xCC in codes
-                    and not {0xC0, 0xC1, 0xC2, 0xC3, 0xC4, 0xDB}
-                    & set(codes)
-                    and blob8[sos_at + 5 + 2 * ns] == 4  # Ss = pred
-                )
-                rows["media_id"].append(i)
-                rows["width"].append(width)
-                rows["height"].append(height)
-                rows["rt8_exact"].append(
-                    bool(dec8.dtype == np.uint8 and (dec8 == rgb).all())
-                )
-                rows["rt12_exact"].append(
-                    bool(
-                        dec12.dtype == np.uint16
-                        and (dec12[:, :, 0] == g12).all()
-                    )
-                )
-                rows["rt16_exact"].append(
-                    bool(
-                        dec16.dtype == np.uint16
-                        and (dec16[:, :, 0] == g16).all()
-                    )
-                )
-                rows["sof11_stream"].append(bool(stream_ok))
-                rows["arith_smaller"].append(
-                    bool(
-                        len(blob8)
-                        < len(jpeg_encode_lossless(rgb, predictor=4))
-                    )
-                )
-            yield pd_.DataFrame(rows)
-
-    fanout = spark.sparkContext.defaultParallelism
-    return docs.select("doc_id").repartition(fanout).mapInPandas(
-        _batches,
-        schema=(
-            "media_id long, width int, height int, rt8_exact boolean, "
-            "rt12_exact boolean, rt16_exact boolean, "
-            "sof11_stream boolean, arith_smaller boolean"
-        ),
     )
 
 
@@ -9078,10 +8404,7 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "q188_jpeg_subsampled": q188_jpeg_subsampled,
     "q189_png_profiles": q189_png_profiles,
     "q190_tvd_drift_gate": q190_tvd_drift_gate,
-    "q191_mp4_metadata": q191_mp4_metadata,
     "q192_streaming_semdedup": q192_streaming_semdedup,
-    "q193_fmp4_fragments": q193_fmp4_fragments,
-    "q194_gif_codec": q194_gif_codec,
     "q195_flac_codec": q195_flac_codec,
     "q196_warc_ingest": q196_warc_ingest,
     "q197_flac_lpc": q197_flac_lpc,
@@ -9092,8 +8415,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "q202_url_normalize": q202_url_normalize,
     "q203_robots_decisions": q203_robots_decisions,
     "q204_jpeg_progressive": q204_jpeg_progressive,
-    "q205_warc_zstd_ingest": q205_warc_zstd_ingest,
-    "q206_zstd_roundtrip": q206_zstd_roundtrip,
     "q207_png_subbyte": q207_png_subbyte,
     "q208_flac_depths": q208_flac_depths,
     "q209_exact_stratified_sample": q209_exact_stratified_sample,
@@ -9107,12 +8428,10 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "q217_quantile_sketch": q217_quantile_sketch,
     "q218_streaming_kmv": q218_streaming_kmv,
     "q219_streaming_cms": q219_streaming_cms,
-    "q220_jpeg_arithmetic": q220_jpeg_arithmetic,
     "q221_theta_set_ops": q221_theta_set_ops,
     "q222_streaming_quantile": q222_streaming_quantile,
     "q223_int8_ann": q223_int8_ann,
     "q224_pq_ann": q224_pq_ann,
-    "q225_jpeg_arith_lossless": q225_jpeg_arith_lossless,
     "q226_substring_dedup": q226_substring_dedup,
     "q227_bpe_train": q227_bpe_train,
     "q228_ivf_int8_rerank": q228_ivf_int8_rerank,

@@ -41,26 +41,44 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from bigdataflink_spark.functions import cleanse as C
+from bigdataflink_spark.operators.dedup import lww_dedup
 
-# dim name -> (natural key col, [attribute cols])
-DIM_SPECS: dict[str, tuple[str, list[str]]] = {
-    "dim_customer": ("source_customer_id", ["customer_name", "country", "age", "email"]),
-    "dim_seller": ("source_seller_id", ["seller_name", "country", "email"]),
-    "dim_product": ("source_product_id", ["product_name", "category", "price", "rating", "reviews"]),
-    "dim_store": ("store_name", ["city", "country", "email"]),
-    "dim_supplier": ("supplier_name", ["country", "email"]),
-    "dim_date": ("sale_date", ["year", "month", "day"]),
+# dim name -> (natural key, fact FK / surrogate key column,
+# {cleansed attribute column: published column}). The cleansed names
+# are what streaming state stores (and the DBAPI sink's tables); the
+# published names are what the warehouse serves. The fact joins each
+# dim on its natural key.
+DIM_SPECS: dict[str, tuple[str, str, dict[str, str]]] = {
+    "dim_customer": ("source_customer_id", "customer_key", {
+        "customer_name": "customer_name", "customer_country": "country",
+        "customer_age": "age", "customer_email": "email",
+    }),
+    "dim_seller": ("source_seller_id", "seller_key", {
+        "seller_name": "seller_name", "seller_country": "country",
+        "seller_email": "email",
+    }),
+    "dim_product": ("source_product_id", "product_key", {
+        "product_name": "product_name", "product_category": "category",
+        "product_price": "price", "product_rating": "rating",
+        "product_reviews": "reviews",
+    }),
+    "dim_store": ("store_name", "store_key", {
+        "store_city": "city", "store_country": "country", "store_email": "email",
+    }),
+    "dim_supplier": ("supplier_name", "supplier_key", {
+        "supplier_country": "country", "supplier_email": "email",
+    }),
+    # year/month/day are derived from the key at publish time
+    "dim_date": ("sale_date", "date_key", {}),
 }
 
-# fact FK column name per dim
-DIM_KEYS = {
-    "dim_customer": "customer_key",
-    "dim_seller": "seller_key",
-    "dim_product": "product_key",
-    "dim_store": "store_key",
-    "dim_supplier": "supplier_key",
-    "dim_date": "date_key",
-}
+# the fact's cleansed columns: LWW order, natural key, measures, and
+# the dims' natural keys it resolves to FKs
+FACT_COLS = [
+    "arrival_seq", "source_sale_id", "sale_quantity", "sale_total_price",
+    "source_customer_id", "source_seller_id", "source_product_id",
+    "store_name", "supplier_name", "sale_date",
+]
 
 
 def cleanse_sales(raw: DataFrame) -> DataFrame:
@@ -124,77 +142,43 @@ def cleanse_sales(raw: DataFrame) -> DataFrame:
     )
 
 
-def _lww(df: DataFrame, key: str) -> DataFrame:
-    """Last-write-wins dedup: latest arrival_seq per natural key."""
-    w = Window.partitionBy(key).orderBy(F.desc("arrival_seq"))
-    return (
-        df.filter(F.col(key).isNotNull())
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn", "arrival_seq")
-    )
+def dim_rows(cleansed: DataFrame, name: str) -> DataFrame:
+    """One dim's last-write-wins rows (latest arrival_seq per non-NULL
+    natural key) in cleansed column names: (arrival_seq, natural key,
+    attrs…) — the unit every sink merges."""
+    key, _, attrs = DIM_SPECS[name]
+    rows = cleansed.select("arrival_seq", key, *attrs).filter(F.col(key).isNotNull())
+    return lww_dedup(rows, [key], "arrival_seq")
 
 
-def _surrogate(df: DataFrame, key_name: str, natural_key: str) -> DataFrame:
-    """Dense deterministic surrogate key: row_number over key order."""
-    w = Window.orderBy(natural_key)
-    return df.withColumn(key_name, F.row_number().over(w).cast("long"))
+def fact_rows(cleansed: DataFrame) -> DataFrame:
+    """The fact's last-write-wins rows over FACT_COLS, keyed on
+    source_sale_id."""
+    rows = cleansed.select(*FACT_COLS).filter(F.col("source_sale_id").isNotNull())
+    return lww_dedup(rows, ["source_sale_id"], "arrival_seq")
+
+
+def publish_dim(name: str, rows: DataFrame) -> DataFrame:
+    """One row per natural key (cleansed column names) → the published
+    dim: attributes renamed, dim_date's calendar parts, and a dense
+    deterministic surrogate key (row_number over natural-key order).
+    The one publish step of the batch build and the streaming
+    finalize, so stream ≡ batch by construction."""
+    key, surrogate, attrs = DIM_SPECS[name]
+    cols = [F.col(key)] + [F.col(c).alias(out) for c, out in attrs.items()]
+    if name == "dim_date":
+        cols += [
+            F.year(key).alias("year"),
+            F.month(key).alias("month"),
+            F.dayofmonth(key).alias("day"),
+        ]
+    w = Window.orderBy(key)
+    return rows.select(*cols).withColumn(surrogate, F.row_number().over(w).cast("long"))
 
 
 def build_dims(cleansed: DataFrame) -> dict[str, DataFrame]:
     """Six dims with LWW dedup + deterministic surrogate keys."""
-    c = cleansed
-    projections = {
-        "dim_customer": c.select(
-            "arrival_seq",
-            "source_customer_id",
-            "customer_name",
-            F.col("customer_country").alias("country"),
-            F.col("customer_age").alias("age"),
-            F.col("customer_email").alias("email"),
-        ),
-        "dim_seller": c.select(
-            "arrival_seq",
-            "source_seller_id",
-            "seller_name",
-            F.col("seller_country").alias("country"),
-            F.col("seller_email").alias("email"),
-        ),
-        "dim_product": c.select(
-            "arrival_seq",
-            "source_product_id",
-            "product_name",
-            F.col("product_category").alias("category"),
-            F.col("product_price").alias("price"),
-            F.col("product_rating").alias("rating"),
-            F.col("product_reviews").alias("reviews"),
-        ),
-        "dim_store": c.select(
-            "arrival_seq",
-            "store_name",
-            F.col("store_city").alias("city"),
-            F.col("store_country").alias("country"),
-            F.col("store_email").alias("email"),
-        ),
-        "dim_supplier": c.select(
-            "arrival_seq",
-            "supplier_name",
-            F.col("supplier_country").alias("country"),
-            F.col("supplier_email").alias("email"),
-        ),
-        "dim_date": c.select(
-            "arrival_seq",
-            "sale_date",
-            F.year("sale_date").alias("year"),
-            F.month("sale_date").alias("month"),
-            F.dayofmonth("sale_date").alias("day"),
-        ),
-    }
-    dims = {}
-    for name, proj in projections.items():
-        natural_key, _ = DIM_SPECS[name]
-        dims[name] = _surrogate(_lww(proj, natural_key), DIM_KEYS[name], natural_key)
-    return dims
+    return {name: publish_dim(name, dim_rows(cleansed, name)) for name in DIM_SPECS}
 
 
 def build_fact(cleansed: DataFrame, dims: dict[str, DataFrame]) -> DataFrame:
@@ -210,33 +194,9 @@ def build_fact(cleansed: DataFrame, dims: dict[str, DataFrame]) -> DataFrame:
     (the reference leaves the fact column NULL too when the dim id is
     NULL: stream_to_star.py:287-294 pass None keys through).
     """
-    fact = _lww(
-        cleansed.select(
-            "arrival_seq",
-            "source_sale_id",
-            "sale_quantity",
-            "sale_total_price",
-            "source_customer_id",
-            "source_seller_id",
-            "source_product_id",
-            "store_name",
-            "supplier_name",
-            "sale_date",
-        ),
-        "source_sale_id",
-    )
-    join_on = {
-        "dim_customer": "source_customer_id",
-        "dim_seller": "source_seller_id",
-        "dim_product": "source_product_id",
-        "dim_store": "store_name",
-        "dim_supplier": "supplier_name",
-        "dim_date": "sale_date",
-    }
-    for dim_name, nk in join_on.items():
-        key_col = DIM_KEYS[dim_name]
-        dim_side = dims[dim_name].select(nk, key_col)
-        fact = fact.join(dim_side, on=nk, how="left")
+    fact = fact_rows(cleansed).drop("arrival_seq")
+    for name, (nk, surrogate, _) in DIM_SPECS.items():
+        fact = fact.join(dims[name].select(nk, surrogate), on=nk, how="left")
 
     w = Window.orderBy("source_sale_id")
     return fact.withColumn("fact_key", F.row_number().over(w).cast("long")).select(

@@ -90,43 +90,24 @@ def warc_build_shard(
     date: str = _WARC_DATE_DEFAULT,
     compression: str = "gzip",
 ) -> bytes:
-    """Build one ``.warc.gz`` / ``.warc.zst`` shard: a leading
-    ``warcinfo`` record (Common Crawl convention) then one
-    ``response`` record per (target_uri, http_status,
-    extra_http_headers, payload) tuple, each as its own gzip member /
-    zstd frame — both layouts keep the record-fetchable-by-
-    (offset, length) property (Common Crawl ships BOTH; a reader that
-    can't open .zst skips a growing slice of the corpus)."""
-    if compression == "gzip":
-        member = _gzip_member
-    elif compression == "zstd":
-        # store-mode: BYTE-deterministic shards (oracle-pinned
-        # offsets/lengths are the same in every deployment)
-        from bigdataflink_spark.operators.zstd import zstd_compress_store
-
-        member = zstd_compress_store
-    elif compression == "zstd-auto":
-        # production write path (round-9 encode seam): real
-        # compression through the native binding where one exists,
-        # store-speed legal frames otherwise. NOT byte-deterministic
-        # across deployments — never use under a bytes/offset oracle.
-        from bigdataflink_spark.operators.zstd import zstd_compress_auto
-
-        def member(rec: bytes) -> bytes:
-            return zstd_compress_auto(rec, pure_fallback="store")
-    else:
+    """Build one ``.warc.gz`` shard: a leading ``warcinfo`` record
+    (Common Crawl convention) then one ``response`` record per
+    (target_uri, http_status, extra_http_headers, payload) tuple, each
+    as its own gzip member so every record stays fetchable by
+    (offset, length)."""
+    if compression != "gzip":
         raise ValueError(f"unknown WARC compression {compression!r}")
     info = (f"software: bigdataflink-spark-warc/1.0\r\n"
             f"format: WARC File Format 1.0\r\n"
             f"warc-shard: {shard_id}\r\n").encode()
-    members = [member(_warc_record(
+    members = [_gzip_member(_warc_record(
         "warcinfo",
         [("Content-Type", "application/warc-fields")],
         info, date,
     ))]
     for uri, status, extra, payload in records:
         body = http_response(status, extra, payload)
-        members.append(member(_warc_record(
+        members.append(_gzip_member(_warc_record(
             "response",
             [("WARC-Target-URI", uri),
              ("Content-Type", "application/http;msgtype=response")],
@@ -235,36 +216,12 @@ def parse_http_response(body: bytes) -> tuple[int, dict[str, str], bytes]:
 def iter_warc_records(
     shard: bytes,
 ) -> Iterator[tuple[int, int, dict]]:
-    """Walk a ``.warc.gz`` or ``.warc.zst`` shard: ``(member_offset,
-    member_compressed_length, parsed_record)`` per record. The
-    compression is sniffed from the leading magic (gzip ``1f 8b`` vs
-    zstd ``28 b5 2f fd``), exactly how an ingest handles a mixed
-    bucket of Common Crawl shards."""
-    if shard[:2] == b"\x1f\x8b":
-        members = iter_gzip_members(shard)
-    elif shard[:4] in (b"\x28\xb5\x2f\xfd", b"\x5d\x2a\x4d\x18"):
-        from bigdataflink_spark.operators.zstd import (
-            iter_zstd_frames,
-            parse_zstd_dictionary,
-            zstd_decompress,
-        )
-
-        # Common Crawl's .warc.zst layout (iipc warc-specifications):
-        # an OPTIONAL leading skippable frame with magic 0x184D2A5D
-        # carries the shard's zstd dictionary — itself possibly
-        # zstd-compressed — which every following record frame
-        # references for shared-vocabulary compression.
-        dictionary = None
-        if shard[:4] == b"\x5d\x2a\x4d\x18":
-            size = int.from_bytes(shard[4:8], "little")
-            blob = shard[8:8 + size]
-            if blob[:4] == b"\x28\xb5\x2f\xfd":
-                blob = zstd_decompress(blob)
-            dictionary = parse_zstd_dictionary(blob)
-        members = iter_zstd_frames(shard, dictionary)
-    else:
+    """Walk a ``.warc.gz`` shard: ``(member_offset,
+    member_compressed_length, parsed_record)`` per record. Any leading
+    magic other than gzip's ``1f 8b`` is rejected."""
+    if shard[:2] != b"\x1f\x8b":
         raise ValueError(
             f"unknown WARC shard compression (magic {shard[:4]!r})"
         )
-    for off, length, raw in members:
+    for off, length, raw in iter_gzip_members(shard):
         yield off, length, parse_warc_record(raw)

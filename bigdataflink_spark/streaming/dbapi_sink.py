@@ -175,27 +175,17 @@ def upsert_star_batch_dbapi(
     PRIMARY KEY. DDL is the caller's job (the reference bootstraps
     its schema the same way: 00_ddl_dw.sql).
     """
-    from pyspark.sql import functions as F
-
-    from bigdataflink_spark.operators.dedup import lww_dedup
-    from bigdataflink_spark.plans.star import cleanse_sales
-    from bigdataflink_spark.streaming.pipeline import DIM_PROJECTION, FACT_COLS
+    from bigdataflink_spark.plans.star import DIM_SPECS, cleanse_sales, dim_rows, fact_rows
 
     cleansed = cleanse_sales(batch).cache()
     try:
-        for name, (key, attrs) in DIM_PROJECTION.items():
-            inc = cleansed.select("arrival_seq", key, *attrs).filter(
-                F.col(key).isNotNull()
-            )
-            inc = lww_dedup(inc, [key], "arrival_seq")
+        for name, (key, _, _) in DIM_SPECS.items():
             dbapi_upsert(
-                inc, connection_factory, name, [key],
+                dim_rows(cleansed, name), connection_factory, name, [key],
                 placeholder=placeholder, num_partitions=num_partitions,
             )
-        inc = cleansed.select(*FACT_COLS).filter(F.col("source_sale_id").isNotNull())
-        inc = lww_dedup(inc, ["source_sale_id"], "arrival_seq")
         dbapi_upsert(
-            inc, connection_factory, "fact_sales_raw", ["source_sale_id"],
+            fact_rows(cleansed), connection_factory, "fact_sales_raw", ["source_sale_id"],
             placeholder=placeholder, num_partitions=num_partitions,
         )
     finally:

@@ -42,8 +42,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from bigdataflink_spark.operators.dedup import lww_dedup
-from bigdataflink_spark.plans.star import DIM_SPECS, build_fact, cleanse_sales
+from bigdataflink_spark.plans.star import (
+    DIM_SPECS,
+    FACT_COLS,  # re-exported: the fact state table's columns
+    build_fact,
+    cleanse_sales,
+    dim_rows,
+    fact_rows,
+    publish_dim,
+)
 
 # The 50 reference CSV columns (FIXTURES.md §1) + arrival_seq. All
 # strings on the wire — typing is the cleanse layer's job.
@@ -133,31 +140,9 @@ def read_sales_stream(spark: SparkSession, jsonl_dir: str, max_files_per_trigger
 STATE_BUCKETS = 16
 
 # Per-dim (natural key, attribute columns) over the cleansed batch —
-# shared by every terminal sink (bucketed-parquet MERGE, DBAPI upsert).
-DIM_PROJECTION = {
-    "dim_customer": (
-        "source_customer_id",
-        ["customer_name", "customer_country", "customer_age", "customer_email"],
-    ),
-    "dim_seller": (
-        "source_seller_id",
-        ["seller_name", "seller_country", "seller_email"],
-    ),
-    "dim_product": (
-        "source_product_id",
-        ["product_name", "product_category", "product_price",
-         "product_rating", "product_reviews"],
-    ),
-    "dim_store": ("store_name", ["store_city", "store_country", "store_email"]),
-    "dim_supplier": ("supplier_name", ["supplier_country", "supplier_email"]),
-    "dim_date": ("sale_date", []),
-}
-
-FACT_COLS = [
-    "arrival_seq", "source_sale_id", "sale_quantity", "sale_total_price",
-    "source_customer_id", "source_seller_id", "source_product_id",
-    "store_name", "supplier_name", "sale_date",
-]
+# the state table layout shared by every terminal sink (bucketed-
+# parquet MERGE, DBAPI upsert); state tables also carry arrival_seq.
+DIM_PROJECTION = {name: (key, list(attrs)) for name, (key, _, attrs) in DIM_SPECS.items()}
 
 
 def upsert_star_batch(batch: DataFrame, batch_id: int, state_dir: str) -> None:
@@ -173,18 +158,16 @@ def upsert_star_batch(batch: DataFrame, batch_id: int, state_dir: str) -> None:
         from bigdataflink_spark.streaming.merge import merge_lww_bucketed
 
         # --- dims: merge cleansed batch columns into LWW state ------
-        for name, (key, attrs) in DIM_PROJECTION.items():
-            inc = cleansed.select("arrival_seq", key, *attrs).filter(F.col(key).isNotNull())
-            inc = lww_dedup(inc, [key], "arrival_seq")
+        for name, (key, _, _) in DIM_SPECS.items():
             path = os.path.join(state_dir, f"state_{name}")
-            merge_lww_bucketed(spark, inc, path, key, num_buckets=STATE_BUCKETS)
+            merge_lww_bucketed(
+                spark, dim_rows(cleansed, name), path, key, num_buckets=STATE_BUCKETS
+            )
 
         # --- fact rows ----------------------------------------------
-        inc = cleansed.select(*FACT_COLS).filter(F.col("source_sale_id").isNotNull())
-        inc = lww_dedup(inc, ["source_sale_id"], "arrival_seq")
         path = os.path.join(state_dir, "state_fact")
         merge_lww_bucketed(
-            spark, inc, path, "source_sale_id", num_buckets=STATE_BUCKETS
+            spark, fact_rows(cleansed), path, "source_sale_id", num_buckets=STATE_BUCKETS
         )
     finally:
         cleansed.unpersist()
@@ -194,40 +177,12 @@ def finalize_star(spark: SparkSession, state_dir: str) -> dict[str, DataFrame]:
     """Publish the star schema from streaming state: assign surrogate
     keys and resolve fact FKs (broadcast joins) — same builders as the
     batch path, so stream ≡ batch by construction."""
-    from pyspark.sql.window import Window
-    from bigdataflink_spark.plans.star import DIM_KEYS
-
-    rename = {
-        "dim_customer": {
-            "customer_country": "country", "customer_age": "age", "customer_email": "email",
-        },
-        "dim_seller": {"seller_country": "country", "seller_email": "email"},
-        "dim_product": {
-            "product_category": "category", "product_price": "price",
-            "product_rating": "rating", "product_reviews": "reviews",
-        },
-        "dim_store": {"store_city": "city", "store_country": "country", "store_email": "email"},
-        "dim_supplier": {"supplier_country": "country", "supplier_email": "email"},
-        "dim_date": {},
-    }
     from bigdataflink_spark.streaming.merge import read_state
 
-    dims: dict[str, DataFrame] = {}
-    for name, (key, _) in DIM_SPECS.items():
-        df = read_state(spark, os.path.join(state_dir, f"state_{name}")).drop("arrival_seq")
-        for old, new in rename[name].items():
-            df = df.withColumnRenamed(old, new)
-        if name == "dim_date":
-            df = df.select(
-                "sale_date",
-                F.year("sale_date").alias("year"),
-                F.month("sale_date").alias("month"),
-                F.dayofmonth("sale_date").alias("day"),
-            )
-        natural_key = DIM_SPECS[name][0]
-        w = Window.orderBy(natural_key)
-        dims[name] = df.withColumn(DIM_KEYS[name], F.row_number().over(w).cast("long"))
-
+    dims = {
+        name: publish_dim(name, read_state(spark, os.path.join(state_dir, f"state_{name}")))
+        for name in DIM_SPECS
+    }
     fact_state = read_state(spark, os.path.join(state_dir, "state_fact"))
     tables = dict(dims)
     tables["fact_sales"] = build_fact(fact_state, dims)

@@ -1,9 +1,9 @@
 """Corruption fuzz across the checksummed codecs: for formats that
 carry integrity checks (PNG chunk CRCs, FLAC CRC-8/CRC-16/MD5, gzip
-member CRCs inside WARC shards, zstd XXH64), a random single-byte
+member CRCs inside WARC shards), a random single-byte
 flip anywhere in the stream must either raise or decode to the
 IDENTICAL output — silent wrong bytes are the one failure mode an
-integrity check exists to prevent. (JPEG/GIF carry no checksums; the
+integrity check exists to prevent. (JPEG/WAV carry no checksums; the
 spec offers no such guarantee there, so they are exercised only for
 no-hang/no-crash behavior.)"""
 
@@ -17,14 +17,11 @@ import pytest
 from bigdataflink_spark.operators.multimodal import (
     flac_decode,
     flac_encode,
-    gif_decode,
-    gif_encode,
     jpeg_decode,
     jpeg_encode,
     png_decode,
     png_encode,
 )
-from bigdataflink_spark.operators.zstd import zstd_compress, zstd_decompress
 from bigdataflink_spark.sources.warc import iter_warc_records, warc_build_shard
 
 _N_FLIPS = 60
@@ -71,12 +68,6 @@ def test_flac_flips_never_silently_wrong():
           seed=2)
 
 
-def test_zstd_flips_never_silently_wrong():
-    data = b"structured corpus content %d " * 400 % tuple(range(400))
-    blob = zstd_compress(data)
-    _fuzz(blob, zstd_decompress, lambda g: g == data, seed=3)
-
-
 def test_warc_gzip_flips_never_silently_wrong():
     recs = [(f"https://x/doc/{i}", 200, [], f"payload {i} ".encode() * 30)
             for i in range(8)]
@@ -93,7 +84,7 @@ def test_warc_gzip_flips_never_silently_wrong():
 
 @pytest.mark.parametrize(
     "codec",
-    ["jpeg", "jpeg12", "jpegll", "gif", "wav24", "wavf32", "wav8"],
+    ["jpeg", "jpeg12", "jpegll", "wav24", "wavf32", "wav8"],
 )
 def test_uncheckedsummed_codecs_never_hang_or_crash_uncontrolled(codec):
     # no integrity check in the format -> no silent-wrongness claim,
@@ -131,16 +122,10 @@ def test_uncheckedsummed_codecs_never_hang_or_crash_uncontrolled(codec):
         f32 = rng.randn(200, 2).astype(np.float32)
         blob = wav_encode(f32, 8000, fmt="float32")
         decode = wav_decode
-    elif codec == "wav8":  # round 9: unsigned 8-bit PCM
+    else:  # wav8 (round 9): unsigned 8-bit PCM
         u8 = rng.randint(0, 256, (200, 2)).astype(np.uint8)
         blob = wav_encode(u8, 8000, fmt="pcm8")
         decode = wav_decode
-    else:
-        frames = [rng.randint(0, 64, (16, 16)).astype(np.uint8)
-                  for _ in range(2)]
-        pal = rng.randint(0, 256, (64, 3)).astype(np.uint8)
-        blob = gif_encode(frames, pal)
-        decode = gif_decode
     r = random.Random(6)
     for _ in range(_N_FLIPS):
         bad = bytearray(blob)

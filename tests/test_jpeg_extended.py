@@ -104,9 +104,9 @@ def test_optimal_dht_never_assigns_all_ones_code():
 
 
 def test_wild_profile_gates_updated():
-    # SOF1 (round 8), SOF3 (round 9) and SOF9/SOF10/SOF11 (round 10)
-    # no longer gate; the remaining differential / hierarchical SOFs
-    # still do, clearly
+    # SOF1 (round 8) and SOF3 (round 9) no longer gate; the
+    # arithmetic-coded and differential / hierarchical SOFs still do,
+    # clearly
     img = _img12(16, 16, seed=9)
     blob = bytearray(jpeg_encode_extended(img, precision=12))
     j = blob.find(b"\xff\xc1")
@@ -116,18 +116,9 @@ def test_wild_profile_gates_updated():
     blob[j + 1] = 0xCD  # differential arithmetic sequential (SOF13)
     with pytest.raises(NotImplementedError, match="SOF13"):
         jpeg_decode(bytes(blob))
-    # a Huffman stream masquerading as SOF9 routes to the arithmetic
-    # path and behaves CONTROLLED: arbitrary bits are a LEGAL QM
-    # symbol stream (unlike Huffman, arithmetic decode rarely
-    # desynchronizes structurally), so the outcome is either a
-    # ValueError from an impossible magnitude/run or a well-formed
-    # garbage image — never a crash or a malformed array
-    blob[j + 1] = 0xC9
-    try:
-        out = jpeg_decode(bytes(blob))
-        assert out.shape == (16, 16, 3)
-    except ValueError:
-        pass
+    blob[j + 1] = 0xC9  # arithmetic sequential (SOF9)
+    with pytest.raises(NotImplementedError, match="SOF9"):
+        jpeg_decode(bytes(blob))
     # a DCT stream masquerading as SOF3 routes to the lossless path
     # and fails CONTROLLED (its SOS Ss=0 is no legal predictor)
     blob[j + 1] = 0xC3

@@ -3,7 +3,7 @@ missing #3": the last non-arithmetic JPEG profile. Lossless means the
 oracle is byte EQUALITY, the strongest pin a codec can carry; no
 external lossless-JPEG decoder exists in this container, so the pins
 are exact round-trips across every predictor/precision/shape plus
-marker-structure checks from the bytes (the zstd-CLI-style
+marker-structure checks from the bytes (an external-decoder
 differential is impossible here and honestly noted)."""
 
 from __future__ import annotations
@@ -119,8 +119,7 @@ def test_gates_and_bad_args():
     blob[sos_at + 5 + 2 * blob[sos_at + 4]] = 0
     with pytest.raises(ValueError, match="predictor"):
         jpeg_decode(bytes(blob))
-    # differential/hierarchical SOFs gate honestly (SOF11 arithmetic
-    # lossless decodes since round 10 — tests/test_jpeg_arith.py)
+    # differential/hierarchical SOFs gate honestly
     blob2 = bytearray(jpeg_encode_lossless(g, predictor=1))
     sof_at = next(o for m, o in jpeg_markers(bytes(blob2)) if m == 0xC3)
     blob2[sof_at + 1] = 0xC7  # SOF7 = differential lossless

@@ -1,18 +1,9 @@
-"""Native-codec seams (VERDICT r7 #4): when a native implementation
-is importable — the `zstandard` binding, PIL — route-able paths must
-agree with the pure-Python codecs BYTE-FOR-BYTE (or within the
-codec's decode tolerance for JPEG, whose inverse DCT is not
-bit-specified). This sandbox ships neither, so these tests skip
-cleanly here and light up in any deployment that has the packages —
-the parity pin that makes "auto-use native when present" safe.
-
-MP4 frame DECODE stays documented-gated (operators/multimodal.py) —
-our surface is the container walk, not codec payloads — but the
-container METADATA now has its own differential (round 9, VERDICT r8
-"What's missing #4"): where an `ffprobe` binary exists, the stream
-count / dims / per-track sample counts it reads from a
-`mp4_build` fixture must equal our stts/stsz/mdhd walk, the zstd-CLI
-pattern applied to the container surface.
+"""Native-codec seams (VERDICT r7 #4): when PIL is importable, the
+pure-Python PNG and JPEG codecs must agree with it BYTE-FOR-BYTE (or
+within the codec's decode tolerance for JPEG, whose inverse DCT is not
+bit-specified). Without PIL those tests skip cleanly and light up in
+any deployment that has the package. Checked-in foreign-encoder JPEG
+fixtures pin the decoder against real libjpeg output either way.
 """
 
 from __future__ import annotations
@@ -21,113 +12,6 @@ import os
 
 import numpy as np
 import pytest
-
-from bigdataflink_spark.operators.zstd import (
-    native_zstd_module,
-    zstd_compress,
-    zstd_compress_auto,
-    zstd_compress_native,
-    zstd_compress_store,
-    zstd_decompress,
-    zstd_decompress_auto,
-    zstd_decompress_native,
-)
-
-
-def _text(n: int = 20_000) -> bytes:
-    import random
-
-    rng = random.Random(84)
-    words = ["shard", "frame", "spark", "corpus", "entropy", "zstd"]
-    return (" ".join(rng.choice(words) for _ in range(n))).encode()
-
-
-def test_auto_decode_always_matches_pure():
-    # with or without the binding, the auto entry equals the pure
-    # decoder (here: pure fallback; with the binding: parity below)
-    for data in (b"", b"xy", _text(2_000), bytes(range(256)) * 40):
-        frame = zstd_compress(data)
-        assert zstd_decompress_auto(frame) == zstd_decompress(frame) == data
-
-
-def test_auto_encode_roundtrip_and_fallback():
-    # runs EVERYWHERE: auto-compressed output must decode back
-    # exactly through both auto and pure decoders, for both fallback
-    # tiers; without the binding the entropy tier must equal the pure
-    # encoder byte-for-byte (deterministic) and the store tier the
-    # store encoder
-    for data in (b"", b"q" * 3_000, _text(2_000)):
-        for fb in ("entropy", "store"):
-            frame = zstd_compress_auto(data, pure_fallback=fb)
-            assert zstd_decompress(frame) == data
-            assert zstd_decompress_auto(frame) == data
-    if native_zstd_module() is None:
-        blob = _text(2_000)
-        assert zstd_compress_auto(blob) == zstd_compress(blob)
-        assert zstd_compress_auto(
-            blob, pure_fallback="store"
-        ) == zstd_compress_store(blob)
-    with pytest.raises(ValueError):
-        zstd_compress_auto(b"x", pure_fallback="lz4")
-
-
-def test_pre_round8_dictionary_dict_falls_back_pure():
-    # a dictionary dict lacking the round-8 "raw" key must route the
-    # native seam to None (pure fallback), not KeyError (ADVICE r8)
-    legacy = {"id": 77, "content": b"", "repeat": [1, 4, 8]}
-    assert zstd_decompress_native(b"", dictionary=legacy) is None
-    assert zstd_compress_native(b"x", dictionary=legacy) is None
-
-
-@pytest.mark.skipif(
-    native_zstd_module() is None, reason="zstandard binding not installed"
-)
-def test_native_zstd_encode_seam_parity():
-    # the round-9 encode seam contract: native frames open in our
-    # pure decoder with the exact payload (and carry the requested
-    # checksum flag), our frames open natively — parity on DECODED
-    # bytes, never frame bytes (both parses are legal but different)
-    for data in (b"", b"a" * 5_000, _text(20_000), bytes(range(256)) * 64):
-        frame = zstd_compress_native(data)
-        assert frame is not None
-        assert zstd_decompress(frame) == data
-        assert zstd_compress_auto(data) == frame  # auto routes native
-        no_ck = zstd_compress_native(data, checksum=False)
-        assert zstd_decompress(no_ck) == data
-        assert not no_ck[4] & 0x04  # frame header: checksum bit off
-        assert frame[4] & 0x04
-
-
-@pytest.mark.skipif(
-    native_zstd_module() is None, reason="zstandard binding not installed"
-)
-def test_native_zstd_parity_on_our_frames():
-    corpora = [b"", b"a" * 5_000, _text(20_000), bytes(range(256)) * 64]
-    for data in corpora:
-        for enc in (zstd_compress, zstd_compress_store):
-            frame = enc(data)
-            assert zstd_decompress_native(frame) == zstd_decompress(frame)
-    # multi-frame + skippable interleave
-    stream = (
-        zstd_compress(b"one")
-        + (0x184D2A50).to_bytes(4, "little")
-        + (4).to_bytes(4, "little")
-        + b"skip"
-        + zstd_compress_store(b"two", checksum=False)
-    )
-    assert zstd_decompress_native(stream) == zstd_decompress(stream)
-
-
-@pytest.mark.skipif(
-    native_zstd_module() is None, reason="zstandard binding not installed"
-)
-def test_native_zstd_parity_on_native_frames():
-    mod = native_zstd_module()
-    for level in (1, 3, 19):
-        data = _text(30_000)
-        frame = mod.ZstdCompressor(level=level).compress(data)
-        assert zstd_decompress(frame) == data
-        assert zstd_decompress_native(frame) == data
 
 
 def _pil():
@@ -185,81 +69,6 @@ def test_pil_jpeg_parity_within_idct_tolerance():
     assert np.abs(ours - theirs).max() <= 2
 
 
-def _ffprobe():
-    import shutil
-
-    return shutil.which("ffprobe")
-
-
-@pytest.mark.skipif(_ffprobe() is None, reason="ffprobe not installed")
-def test_ffprobe_mp4_container_differential(tmp_path):
-    """Round-9 container differential (VERDICT r8 "What's missing
-    #4"): ffprobe's view of an mp4_build fixture — stream count,
-    video dims, per-stream sample (packet) counts, media durations —
-    must equal our stts/stsz/mdhd walk. The samples are filler bytes
-    (no codec config boxes by design), so only container-level facts
-    are compared; frame decode stays gated."""
-    import json
-    import subprocess
-
-    from bigdataflink_spark.operators.multimodal import mp4_build, mp4_scan
-
-    tracks = [
-        {
-            "handler": "vide",
-            "codec": "avc1",
-            "timescale": 1000,
-            "sample_delta": 40,
-            "sample_sizes": [64, 80, 96, 64, 128],
-            "width": 320,
-            "height": 240,
-        },
-        {
-            "handler": "soun",
-            "codec": "mp4a",
-            "timescale": 8000,
-            "sample_delta": 1024,
-            "sample_sizes": [32] * 7,
-        },
-    ]
-    blob = mp4_build(tracks, movie_timescale=1000)
-    ours = mp4_scan(blob)
-    path = tmp_path / "fixture.mp4"
-    path.write_bytes(blob)
-    probe = json.loads(
-        subprocess.run(
-            [
-                _ffprobe(), "-v", "error", "-of", "json",
-                "-show_entries",
-                "stream=index,codec_type,codec_tag_string,width,height,"
-                "nb_frames,duration_ts,time_base",
-                str(path),
-            ],
-            check=True,
-            capture_output=True,
-        ).stdout
-    )
-    streams = probe["streams"]
-    assert len(streams) == ours["n_tracks"] == 2
-    by_type = {s["codec_type"]: s for s in streams}
-    vid = next(t for t in ours["tracks"] if t["handler"] == "vide")
-    aud = next(t for t in ours["tracks"] if t["handler"] == "soun")
-    assert by_type["video"]["width"] == vid["width"] == 320
-    assert by_type["video"]["height"] == vid["height"] == 240
-    assert by_type["video"]["codec_tag_string"] == vid["codec"] == "avc1"
-    # nb_frames comes from the stsz entry count in an unfragmented MP4
-    assert int(by_type["video"]["nb_frames"]) == vid["n_samples"] == 5
-    assert int(by_type["audio"]["nb_frames"]) == aud["n_samples"] == 7
-    # duration_ts is in the stream time_base, which for MP4 is the
-    # track's mdhd timescale — compare against our media duration
-    for s, t in ((by_type["video"], vid), (by_type["audio"], aud)):
-        den = int(s["time_base"].split("/")[1])
-        assert den == t["timescale"]
-        assert (
-            int(s["duration_ts"]) * 1000 // den == t["duration_ms"]
-        )
-
-
 _FIXTURE_DIR = os.path.join(
     os.path.dirname(__file__), "data", "foreign_jpeg"
 )
@@ -270,10 +79,8 @@ _FOREIGN_JPEGS = [
     # checked into tests/data/ as redistributable fixtures: a foreign
     # ENCODER's baseline (SOF0) and progressive (SOF2) bytes through
     # our decoder, the strongest Huffman-path interop available
-    # without djpeg. The arithmetic profiles (SOF9-11) still have no
-    # external fixture (no cjpeg, no network) — that gap stays
-    # honestly open (ADVICE r10 #4); these pin the shared marker
-    # walk, Huffman tables, dequant + IDCT.
+    # without djpeg; these pin the shared marker walk, Huffman
+    # tables, dequant + IDCT.
     (os.path.join(_FIXTURE_DIR, "ipython_2x2.jpg"), 2, 2),
     (os.path.join(_FIXTURE_DIR, "cpython_email_python.jpg"), 16, 16),
     (os.path.join(_FIXTURE_DIR, "rust_embedded_f3.jpg"), 477, 720),

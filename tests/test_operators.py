@@ -1439,86 +1439,6 @@ def test_png_decode_honest_gates():
         png_decode(bad)
 
 
-def test_mp4_container_walk():
-    """Round-4 task #4: the ISO-BMFF builder/parser round-trips real
-    box trees — exact sample tables, floor-division durations, TRUE
-    absolute stco offsets — and the walk tolerates what wild files
-    carry: unknown boxes (skipped by size), 64-bit largesize, v1
-    time boxes, co64 offsets. Frame decode stays an honest gate."""
-    import struct
-
-    import pytest as _pytest
-
-    from bigdataflink_spark.operators.multimodal import (
-        _mp4_box,
-        _mp4_full,
-        mp4_build,
-        mp4_frame_decode,
-        mp4_scan,
-    )
-
-    tracks = [
-        {
-            "handler": "vide", "codec": "avc1", "timescale": 1000,
-            "sample_delta": 40, "sample_sizes": [100, 120, 90],
-            "width": 320, "height": 240,
-        },
-        {
-            "handler": "soun", "codec": "mp4a", "timescale": 48000,
-            "sample_delta": 1024, "sample_sizes": [50, 60],
-        },
-    ]
-    buf = mp4_build(tracks)
-    m = mp4_scan(buf)
-    assert (m["brand"], m["movie_timescale"], m["n_tracks"]) == ("isom", 1000, 2)
-    assert m["duration_ms"] == 120  # max(3*40, floor(2*1024/48))
-    v, a = m["tracks"]
-    assert (v["handler"], v["codec"], v["n_samples"]) == ("vide", "avc1", 3)
-    assert (v["width"], v["height"], v["total_sample_bytes"]) == (320, 240, 310)
-    assert (a["handler"], a["codec"], a["duration_ms"]) == ("soun", "mp4a", 42)
-    # stco offsets are REAL file positions: the deterministic sample
-    # filler (byte k of sample j = (j*31+k)%256) sits exactly there
-    off = v["chunk_offsets"][0]
-    assert buf[off : off + 4] == bytes((0 * 31 + k) % 256 for k in range(4))
-    assert a["chunk_offsets"][0] == off + 310
-
-    # wild-file tolerance: an unknown top-level box + a free box inside
-    # moov must be skipped by size without disturbing the walk
-    ftyp_end = 28
-    wild = (
-        buf[:ftyp_end]
-        + _mp4_box(b"skip", b"\x00" * 11)
-        + buf[ftyp_end:]
-    )
-    m2 = mp4_scan(wild)
-    assert m2["n_tracks"] == 2 and m2["duration_ms"] == 120
-    # (offsets in stco now lag the inserted box — real remuxers
-    # rewrite stco; the PARSER must still report what the box says)
-    assert m2["tracks"][0]["chunk_offsets"][0] == off
-
-    # 64-bit largesize mdat + co64 offsets + v1 mvhd parse
-    big = _mp4_box(b"ftyp", b"isom" + struct.pack(">I", 0x200) + b"isom")
-    payload = bytes(16)
-    mdat64 = struct.pack(">I", 1) + b"mdat" + struct.pack(">Q", 16 + len(payload)) + payload
-    mvhd1 = _mp4_full(
-        b"mvhd", 1, 0,
-        struct.pack(">QQ", 0, 0) + struct.pack(">IQ", 90000, 180000)
-        + struct.pack(">IHH", 0x00010000, 0x0100, 0) + bytes(8)
-        + struct.pack(">9i", 0x00010000, 0, 0, 0, 0x00010000, 0, 0, 0, 0x40000000)
-        + bytes(24) + struct.pack(">I", 1),
-    )
-    m3 = mp4_scan(big + mdat64 + _mp4_box(b"moov", mvhd1))
-    assert m3["movie_timescale"] == 90000 and m3["duration_ms"] == 2000
-    assert m3["n_tracks"] == 0
-
-    with _pytest.raises(NotImplementedError, match="ffmpeg"):
-        mp4_frame_decode(buf)
-
-    # truncated box is a refusal, not a silent partial parse
-    with _pytest.raises(ValueError, match="overruns"):
-        mp4_scan(buf[: len(buf) - 40])
-
-
 def test_png_decode_batch_equivalence():
     """png_decode_batch ≡ png_decode byte-for-byte over a shuffled mix
     of cohorts (all color types × all filters × two shapes, palette
@@ -1556,44 +1476,6 @@ def test_png_decode_batch_equivalence():
     ps = [png_encode(im, filter_type=4) for im in imgs]
     for a, b in zip(png_decode_batch(ps), (png_decode(p) for p in ps)):
         assert (a == b).all()
-
-
-def test_mp4_fragmented_walk():
-    """fMP4/CMAF (the DASH/HLS wire shape): empty moov sample tables +
-    mvex/trex defaults, samples carried by moof/traf/trun — the walk
-    accumulates counts, bytes, and moof-relative chunk offsets across
-    fragments, byte-exactly."""
-    from bigdataflink_spark.operators.multimodal import (
-        mp4_build_fragmented,
-        mp4_scan,
-    )
-
-    tracks = [
-        {
-            "handler": "vide", "codec": "avc1", "timescale": 1000,
-            "sample_delta": 40,
-            "sample_sizes": [100 + j for j in range(20)],
-            "width": 320, "height": 240,
-        },
-        {
-            "handler": "soun", "codec": "mp4a", "timescale": 48000,
-            "sample_delta": 1024,
-            "sample_sizes": [50 + j for j in range(11)],
-        },
-    ]
-    buf = mp4_build_fragmented(tracks, samples_per_fragment=8)
-    m = mp4_scan(buf)
-    assert m["n_fragments"] == 3  # ceil(20/8)
-    v, a = m["tracks"]
-    assert (v["n_samples"], v["total_sample_bytes"]) == (20, sum(100 + j for j in range(20)))
-    assert (a["n_samples"], a["total_sample_bytes"]) == (11, sum(50 + j for j in range(11)))
-    assert len(v["chunk_offsets"]) == 3 and len(a["chunk_offsets"]) == 2
-    # trun data offsets resolve against MOOF START to the true sample
-    # bytes: fragment 2's first video sample is j=8 of the filler
-    off = v["chunk_offsets"][1]
-    assert buf[off : off + 4] == bytes((8 * 31 + k) % 256 for k in range(4))
-    # mdhd still carries full durations (this builder writes them)
-    assert v["duration_ms"] == 800 and a["duration_ms"] == 234
 
 
 def test_png_adam7_interlace_roundtrips():
@@ -1677,192 +1559,6 @@ def test_png_16bit_roundtrips():
     ]
     for a, b in zip(png_decode_batch(ps), (png_decode(p) for p in ps)):
         assert (a == b).all()
-
-
-def test_gif_lzw_stream_contract():
-    """GIF variable-code-size LZW: round trips across code-width
-    growth to 12 bits and the reset-at-4096 CLEAR policy; tiny and
-    degenerate streams; and the KwKwK (code == next_code) case."""
-    import numpy as np
-
-    from bigdataflink_spark.operators.multimodal import (
-        _gif_lzw_decode,
-        _gif_lzw_encode,
-    )
-
-    # high-entropy stream long enough to fill the 12-bit table
-    # several times over (forces growth 7->12 and >=1 CLEAR reset)
-    ks = np.arange(300_000, dtype=np.int64)
-    data = ((ks * 2654435761) % 251 % 64).astype(np.uint8).tobytes()
-    enc = _gif_lzw_encode(data, 6)
-    assert bytes(_gif_lzw_decode(enc, 6)) == data
-    assert len(enc) < len(data)  # it actually compresses
-
-    for payload in (b"", b"\x00", b"\x00" * 500, bytes(range(4)) * 100):
-        for mcs in (2, 3):
-            assert (
-                bytes(_gif_lzw_decode(_gif_lzw_encode(payload, mcs), mcs))
-                == payload
-            )
-
-    # KwKwK: run of identical symbols makes the decoder resolve a
-    # code equal to its own next_code on the second step
-    run = b"\x01" * 50
-    assert bytes(_gif_lzw_decode(_gif_lzw_encode(run, 2), 2)) == run
-
-    # deferred-CLEAR tolerance: strip our reset and keep the table
-    # frozen — decode a stream hand-built without any mid-stream
-    # CLEAR by re-encoding a short prefix (never fills the table) and
-    # verifying the decoder consumed it with zero resets
-    short = bytes(range(16)) * 8
-    assert bytes(_gif_lzw_decode(_gif_lzw_encode(short, 4), 4)) == short
-
-
-def test_gif_codec_roundtrip_profiles():
-    """GIF89a container round trips: plain + interlaced single
-    frames, multi-frame animation with per-frame delays, delta
-    frames with transparency compositing, disposal-2
-    restore-to-background, and the 2-entry-palette minimum-code-size
-    floor."""
-    import numpy as np
-
-    from bigdataflink_spark.operators.multimodal import (
-        gif_decode,
-        gif_encode,
-    )
-
-    js = np.arange(64, dtype=np.int64)
-    pal = np.stack(
-        [(js * 5 + 1) % 256, (js * 11 + 3) % 256, (js * 23 + 7) % 256],
-        axis=1,
-    ).astype(np.uint8)
-
-    img = ((np.arange(16 * 12) * 31) % 64).astype(np.uint8).reshape(12, 16)
-    for interlace in (False, True):
-        frames, p, meta = gif_decode(gif_encode(img, pal, interlace=interlace))
-        assert frames.shape == (1, 12, 16)
-        assert (frames[0] == img).all()
-        assert (p[:64] == pal).all()
-        assert meta[0]["interlaced"] is interlace
-
-    # odd shapes through the interlace permutation (pass rows overlap
-    # unevenly below 8 rows)
-    for h, w in ((1, 1), (7, 5), (9, 17), (8, 8)):
-        im = ((np.arange(h * w) * 13) % 64).astype(np.uint8).reshape(h, w)
-        frames, _, _ = gif_decode(gif_encode(im, pal, interlace=True))
-        assert (frames[0] == im).all(), (h, w)
-
-    # animation: full frames + delays
-    anim = [
-        ((np.arange(16 * 12) * 31 + f * 7) % 64)
-        .astype(np.uint8)
-        .reshape(12, 16)
-        for f in range(3)
-    ]
-    frames, _, meta = gif_decode(gif_encode(anim, pal, delays_cs=[4, 5, 6]))
-    assert frames.shape == (3, 12, 16)
-    for f in range(3):
-        assert (frames[f] == anim[f]).all()
-    assert [m["delay_cs"] for m in meta] == [4, 5, 6]
-
-    # delta frame at (left=3, top=2) with transparent index 7: the
-    # composited canvas keeps the base pixel under the hole
-    base = np.zeros((10, 10), np.uint8)
-    delta = np.full((4, 4), 5, np.uint8)
-    delta[1, 1] = 7
-    frames, _, _ = gif_decode(
-        gif_encode(
-            [base, delta], pal, canvas=(10, 10), boxes=[(0, 0), (3, 2)],
-            transparent=7,
-        )
-    )
-    exp = base.copy()
-    exp[2:6, 3:7] = 5
-    exp[3, 4] = 0
-    assert (frames[1] == exp).all()
-
-    # disposal 2: frame rect restores to background before the next
-    frames, _, _ = gif_decode(
-        gif_encode(
-            [
-                np.full((6, 6), 9, np.uint8),
-                np.full((6, 6), 3, np.uint8),
-                np.full((2, 2), 5, np.uint8),
-            ],
-            pal,
-            canvas=(6, 6),
-            boxes=[(0, 0), (0, 0), (2, 2)],
-            disposals=[2, 2, 0],
-        )
-    )
-    exp2 = np.zeros((6, 6), np.uint8)
-    exp2[2:4, 2:4] = 5
-    assert (frames[0] == 9).all() and (frames[1] == 3).all()
-    assert (frames[2] == exp2).all()
-
-    # 2-color palette: spec floors the LZW minimum code size at 2
-    pal2 = np.array([[0, 0, 0], [255, 255, 255]], np.uint8)
-    bw = (np.arange(64) % 2).astype(np.uint8).reshape(8, 8)
-    frames, p, _ = gif_decode(gif_encode(bw, pal2))
-    assert (frames[0] == bw).all()
-    assert (p[:2] == pal2).all()
-
-
-def test_gif_decode_wild_files():
-    """Foreign-file tolerances the encoder never emits: GIF87a
-    headers, a local color table, comment/plain-text extensions, and
-    interlaced frames inside animations."""
-    import struct
-
-    import numpy as np
-
-    from bigdataflink_spark.operators.multimodal import (
-        _gif_lzw_encode,
-        _gif_subblocks,
-        gif_decode,
-        gif_encode,
-    )
-
-    pal = np.stack(
-        [np.arange(16) * 16, np.arange(16) * 8, np.arange(16) * 4], axis=1
-    ).astype(np.uint8)
-    img = ((np.arange(6 * 5) * 3) % 16).astype(np.uint8).reshape(5, 6)
-
-    # hand-build: GIF87a + GCT + comment ext + image w/ LOCAL table
-    local = pal[::-1].copy()
-    out = bytearray(b"GIF87a")
-    out += struct.pack("<HH", 6, 5)
-    out += bytes([0x80 | (7 << 4) | 3, 0, 0])
-    out += pal.tobytes()
-    out += b"\x21\xfe" + _gif_subblocks(b"hi there")  # comment ext
-    out += b"\x2c" + struct.pack("<HHHH", 0, 0, 6, 5)
-    out += bytes([0x80 | 3])  # local color table, 16 entries
-    out += local.tobytes()
-    out += bytes([4]) + _gif_subblocks(_gif_lzw_encode(img.tobytes(), 4))
-    out += b"\x3b"
-    frames, p, meta = gif_decode(bytes(out))
-    assert (p[:16] == pal).all()
-    assert meta[0]["local_palette"] is True
-    assert (meta[0]["local_indices"] == img).all()
-    assert (meta[0]["local_table"] == local).all()
-
-    # interlaced delta frame inside an animation round trips through
-    # the composite (encoder path: interlace applies to every frame)
-    anim = [
-        ((np.arange(8 * 8) + f) % 16).astype(np.uint8).reshape(8, 8)
-        for f in range(2)
-    ]
-    frames, _, meta = gif_decode(gif_encode(anim, pal, interlace=True))
-    for f in range(2):
-        assert (frames[f] == anim[f]).all()
-        assert meta[f]["interlaced"] is True
-
-    # truncated stream raises, not garbage
-    enc = gif_encode(img, pal)
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        gif_decode(enc[: len(enc) // 2])
 
 
 def test_flac_stream_contract():

@@ -115,6 +115,20 @@ def test_http_content_length_overrun_raises():
         parse_http_response(b"HTTP/1.1 200 OK\r\nContent-Length: 10\r\n\r\nabc")
 
 
+def test_unknown_compression_raises():
+    """Shards are gzip only: any other writer compression and any
+    other leading magic — including a zstd frame's ``28 b5 2f fd`` —
+    are rejected before a single record is parsed."""
+    recs = [("https://x/doc/0", 200, [], b"payload 0")]
+    with pytest.raises(ValueError, match="unknown WARC compression"):
+        warc_build_shard(recs, 0, compression="lz4")
+    with pytest.raises(ValueError, match="unknown WARC shard"):
+        list(iter_warc_records(b"\x00\x01\x02\x03junk"))
+    member = zlib.decompress(warc_build_shard(recs, 0), 31)
+    with pytest.raises(ValueError, match="unknown WARC shard compression"):
+        list(iter_warc_records(b"\x28\xb5\x2f\xfd" + member))
+
+
 @settings(max_examples=40, deadline=None)
 @given(
     payloads=st.lists(st.binary(min_size=0, max_size=400), min_size=1, max_size=8),

@@ -31,9 +31,7 @@ def main() -> None:
     n_warm = int(os.environ.get("SPARK_GRAFT_CPUS", "32")) * 4
 
     def _preimport(it):
-        import bigdataflink_spark.operators.jpeg_arith  # noqa: F401
         import bigdataflink_spark.operators.multimodal  # noqa: F401
-        import bigdataflink_spark.operators.zstd  # noqa: F401
 
         yield from it
 

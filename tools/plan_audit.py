@@ -202,9 +202,7 @@ NOTES = {
     "q188_jpeg_subsampled": "q187's shape (ONE Arrow map stage, zero shuffles/joins) over the wild-profile path: 4:2:0 chroma subsampling + DRI/RSTn restart intervals through the generalized MCU decoder; disjoint doc_id%5==1 fifth, bounded-error contract like every lossy codec here.",
     "q189_png_profiles": "ONE Arrow map stage round-tripping all four non-RGB PNG color types (gray/Sub, gray+alpha/Up, RGBA/Paeth, palette/Average with PLTE expansion): zero shuffles, zero joins; PNG is lossless so the oracle recomputes every decoded byte from the closed forms — exact stats, never bounds.",
     "q190_tvd_drift_gate": "q182's release-gate shape extended to DISTRIBUTION drift: declared (bounded) TVD buckets compile to conditional SUMs inside the ONE aggregate scan per snapshot — no groupBy, no extra exchange; TVD ppm is an exact DECIMAL(38,0) cross-product sum with one integral division, so verdicts are partition-order-free.",
-    "q191_mp4_metadata": "ONE Arrow map stage (closed-form two-track MP4 build -> recursive box walk -> per-track metadata rows): zero shuffles, zero joins — the container-parse twin of the codec queries; stco offsets are pinned ABSOLUTE byte positions, so the oracle detects one-byte drift anywhere in the box tree.",
     "q192_streaming_semdedup": "Three accept_batch steps, each ONE cell-keyed equi-join of the batch against parquet state (state side never re-scored, exact cosine on candidates only) + one state append; stream-over-slices == batch semantic_dedup exactly, so a stateful streaming operator gets a full value-hash oracle (q185's EXISTS).",
-    "q193_fmp4_fragments": "q191's Arrow-map shape over the fragmented layout: sample counts/bytes exist only in per-fragment trun tables, so the walk ACCUMULATES across moof boxes; zero shuffles, zero joins; with q187/q188/q189/q191 the codec contracts cover all five disjoint corpus fifths.",
     "q197_flac_lpc": "q195's fan-out Arrow-map shape for the LPC subframe family: period-6 linear recurrences (closed-form via i%6, SQL-recomputable) that fixed differencing can never whiten but order-2 LPC kills; lpc_used is read back from the stream BYTES (flac_subframe_histogram), not planner intent, and compressed_smaller pins that LPC delivers real compression while hash noise stays honestly verbatim; one 8-byte-row doc-id shuffle, zero joins.",
     "q209_exact_stratified_sample": "Budgeted corpus draw: ONE tiny stratum-count aggregate (collected driver-side — strata are languages, never corpus-sized; merge.py's justified-collect pattern), Hamilton largest-remainder apportionment in exact integer arithmetic, then a STAGED per-stratum selection (round 8): big strata pre-filter to bucket < ceil(RES*k/n) so the rank window sees ~alloc rows instead of the stratum population (no one-reducer sort of a dominant language at 100x; survivor-count check escalates any deficient stratum to the full rank, so the draw is identical by construction), allocation table broadcast back; md5-bucket ranking makes the draw a pure function of (salt, id), so the oracle replays the identical 200 selections.",
     "q210_jpeg_extended": "Extended-sequential JPEG (SOF1) contract: one Arrow map stage over the doc_id%7==4 slice fanned out by the tiny doc-id repartition (heavy per-row codec work on all cores), zero joins, zero aggregates beyond the map; the 12-bit encode/decode plus the 8-bit SOF0/SOF1 twin comparison are per-row CPU, exactly where mapInPandas wants them.",
@@ -231,8 +229,6 @@ NOTES = {
     "q212_jpeg_lossless": "Lossless JPEG (SOF3) contract: q210's Arrow-map shape over the doc_id%7==2 slice (the last free seventh), zero joins; three per-row Annex-H predictive encode/decode round-trips (8-bit RGB pred 4, 12-bit gray pred 7, 16-bit gray pred 1 + restarts) are byte-EXACT by construction — the one JPEG mode where the contract is equality, not an error floor — and sof3_stream/compressed_smaller are read from the emitted bytes via the real marker walk.",
     "q208_flac_depths": "q195's fan-out Arrow-map shape at the OTHER two whole-byte FLAC widths: an 8-bit mono sawtooth and a 24-bit stereo pair of closed-form linear signals encode/decode at native width (STREAMINFO MD5 over 1-/3-byte LE PCM, side channel at bps+1=25 bits, width-generic Rice/fixed machinery); lossless, so exact position-weighted per-channel stats recompute in SQL, and compressed_smaller pins real compression at both widths; one 8-byte-row doc-id shuffle, zero joins.",
     "q207_png_subbyte": "q189's shape (ONE Arrow map stage, zero shuffles, zero joins) over the sub-byte tier: 1/2/4-bit gray + palette profiles (MSB-first packed scanlines, byte-padded rows, filters at bpp=1, Adam7 passes packed independently, d=4 palette interlaced) — lossless, so the oracle recomputes every decoded value from the closed forms; one wrong bit in pack/unfilter/unpack/scatter fails the value hash.",
-    "q206_zstd_roundtrip": "ONE fan-out Arrow map, zero joins: per-doc text -> REAL entropy-coded zstd frame (per-block Huffman literals w/ direct-weight canonical tree vs RLE vs raw, operators/zstd.py::zstd_compress, unzstd-interop pinned) -> full FSE/Huffman decode -> md5-exact recovery; entropy_smaller pins genuine shrinkage at the corpus-measured >=256-byte threshold, and corrupt_detected flips a mid-frame byte and pins that decode RAISES (XXH64/structural) instead of yielding silent wrong bytes.",
-    "q205_warc_zstd_ingest": "q196's shard shape over a MIXED-compression corpus: 256-doc shards (both codecs present at every scale), odd shards one-RFC-8878-zstd-frame-per-record (spec-built store encoder + full frame/block/XXH64 walk in operators/zstd.py, unzstd-interop pinned), even shards the gzip layout; the reader sniffs per-shard magic; slice_fetch_ok re-parses every record from its bare (offset,length) slice — the fetchability property both layouts exist for — and the oracle pins it TRUE per record with md5-exact payloads.",
     "q204_jpeg_progressive": "q188's shape (ONE fan-out Arrow map, zero shuffles beyond the 8-byte doc-id fan-out, zero joins) over the progressive path: SOF2 encode (libjpeg 10-scan spectral-selection + successive-approximation script, 4:2:0, per-scan RSTn) -> multi-scan decode (DC/AC first+refine, cross-block EOB runs, non-interleaved component grids); the contract is byte-equality of progressive vs baseline decodes (same quantized coefficients, different entropy order) plus scan-script-reorder invariance — stronger than a lossy bound.",
     "q203_robots_decisions": "ONE fan-out Arrow map, zero joins: per-site robots.txt bodies (deterministic from doc_id%40) are parsed ONCE per site cohort (memoized in the map stage — the amortization a billion-row decision join needs) and each doc's (agent, path) gets an RFC 9309 decision: longest-match precedence with the longer Allow /doc/*0$ overriding Disallow /doc/ exactly on ids ending in 0, specific-group selection stopping fallthrough to '*', per-group crawl-delay; the oracle recomputes every decision from the rule construction.",
     "q202_url_normalize": "ONE whole-stage-codegen projection, zero Python, zero shuffles: deterministic URLs built per row by Catalyst concat exercise the hazard matrix (mixed case, WWW., multi-part TLDs, trailing-dot host, explicit vs scheme-default ports, percent escapes, fragments), then functions/urls.py's pure-expression normalizers extract scheme/host/port/registrable-domain/decoded-path/param/fragment; the oracle applies the SAME policy in DuckDB, pinning cross-engine Java-regex-vs-RE2 parity — the actual risk of expression-based URL work at crawl scale.",
@@ -242,18 +238,15 @@ NOTES = {
     "q198_wds_tar_ingest": "q196's shard shape for the WebDataset layout: ONE keyed shuffle into 1024-doc shards -> per-shard applyInPandas builds a POSIX-ustar tar (spec-built headers: octal fields, space-summed checksums; NOT the tarfile module, but two-way stdlib-tarfile interop is test-pinned) with adjacent {key}.json+{key}.txt members per sample, then parses it back (checksum verify, bounds checks, adjacency-enforced sample grouping); zero joins; txt_md5/meta_lang/meta_n_chars pin byte-exact member recovery AND JSON sidecar parsing, sample_index pins grouping and walk order.",
     "q196_warc_ingest": "ONE keyed shuffle of (doc_id, text) into 1024-doc shards -> per-shard applyInPandas builds a Common-Crawl-layout .warc.gz (one gzip member PER record, leading warcinfo) and parses it back through the real ingest path (gzip member walk w/ CRC verify, WARC header/Content-Length/closing-CRLF validation, HTTP status+header+payload extraction); zero joins; payload_md5 pins byte-exact payload recovery against DuckDB's md5(text), rec_index pins member-split count and walk order; shard COUNT scales with the corpus (bounded per-shard work), and at 100 TB the build half disappears — shards already exist as binary files and the parse half maps over them.",
     "q195_flac_codec": "ONE Arrow map stage (closed-form PCM -> real FLAC encode (vectorized Rice/partition-order planner: one (15,n) shift matrix + reduceat at the finest order, coarser orders pairwise-folded; cost-chosen stereo decorrelation) -> decode w/ CRC-8/CRC-16/MD5 verification -> exact per-channel stats) fed by ONE tiny doc-id fan-out shuffle (8-byte rows; FLAC at ~5 ms/doc is the heaviest per-row codec, and the audit corpus is a single parquet file = one scan partition — without the fan-out the stage runs on one core); zero joins; wsum_amp position-weights samples so frame-reassembly order bugs fail the hash, and compressed_smaller pins real compression (TRUE on structured signals, FALSE on hash noise).",
-    "q194_gif_codec": "ONE Arrow map stage (closed-form rasters -> real GIF89a encode (LZW/interlace/animation) -> decode -> palette-expanded exact stats): zero shuffles, zero joins; GIF is lossless so the oracle recomputes every decoded byte, and wsum_val position-weights values so even stats-invariant row permutations (wrong deinterlace) fail the hash.",
     "q186_snapshot_vacuum": "Four snapshot writes + vacuum (driver-side FS metadata ops — commit record deleted atomically before its data dir) + two pruned single-version reads; the audit row is driver-built, the only scans are the two read-backs.",
     "q185_semantic_dedup": "SemDeDup shape: the pair join keys on the CELL (equi-join), bounding the quadratic term by cell size; cells that outgrow exact_cell_limit auto-switch candidates to within-cell sign-LSH (probe-verified x1.06 wall for x100 data); norms precompute before the join multiplies rows; the drop set distincts and left-joins back.",
     "q184_wav_container": "Two chained Arrow map stages (wrap PCM16 in real RIFF/WAVE, chunk-walk decode + stats) — zero shuffles, the q166 shape with genuine container parsing in the middle.",
     "q183_png_codec": "Two chained Arrow map stages (encode real PNGs, inflate+unfilter+stats) — zero shuffles, zero joins, q71's embarrassingly-parallel shape with a genuinely compressed wire format in the middle; at 100 TB the encode stage is replaced by a binary-column scan.",
     "q182_snapshot_drift_gate": "Cross-snapshot release gate: ONE aggregate scan per snapshot (all drift rules share it — count, null counts, distinct via the Expand rewrite), then 1-row×1-row arithmetic; drift ppm in exact DECIMAL(38,0) cross-products with one integral division, so verdicts are partition-order-free.",
-    "q220_jpeg_arithmetic": "Arithmetic JPEG (SOF9/SOF10) contract: q212's Arrow-map shape over the doc_id%11==6 slice, zero joins; per row the SAME quantized coefficients flow through SOF0 Huffman and SOF9/SOF10 QM-coded entropy layers (operators/jpeg_arith.py) and must decode to IDENTICAL pixels — any coder/model/stuffing/carry slip flips a boolean; stream pins (SOF9+DAC present, no DHT) read from the bytes via the real marker walk; arith_smaller pins genuine adaptive-estimation compression.",
     "q221_theta_set_ops": "Theta set-operation audit: both bottom-k sketches build with q213's shape (per-partition k-capped minima in one Arrow stage, k·P candidate rows to a TakeOrdered), then ALL set algebra happens on two 1-row arrays — sub-theta filter/intersect/except are array expressions, estimates are int64 DIV. The only corpus-shuffling legs are the audit-only exact intersection/union; at 100 TB the operator itself moves two <=k arrays.",
     "q222_streaming_quantile": "Streaming quantile sketch: three accept_batch steps, each ONE <=49-level census groupBy (map-side combined) + a broadcast semantic-cutoff filter over <=cap state rows + the batch scan, publishing cmsfreq-style generations (replay rewrites identically, _SUCCESS = visibility); gen-b == batch quantile_sketch(prefix) row-for-row, so each per-batch summary replays in SQL — full value oracle for stateful streaming quantiles.",
     "q223_int8_ann": "Int8-quantized ANN audit: quantization is a whole-stage-codegen array projection (floor over IEEE doubles, no Python), scoring is q24's broadcast shape with exact int64 dot products and one correctly-rounded divide+sqrt as the rank key — the retrieval RESULT (not just its quality band) is engine-deterministic; the float exact-cosine leg is the audit, the int8 pass is the 100 TB path (4x smaller vectors).",
     "q224_pq_ann": "PQ ANN audit: encode = one broadcast codebook join + rank-1 window per (id, sub); ADC scoring reads ONLY codes + a per-query broadcast 8x64 LUT with a fixed-order fold over subspaces (never a float groupBy-sum); shortlist top-50 -> exact-cosine rerank touches 50 raw vectors per query. At 100 TB retrieval scans 8-byte codes, not 256-byte vectors — the raw corpus stays cold.",
-    "q225_jpeg_arith_lossless": "Arithmetic lossless JPEG (SOF11) contract: q212's Arrow-map shape over the doc_id%11==7 slice, zero joins; per row the Annex-H predictors drive the H.1.2.2 conditioned QM difference model (25 gradient contexts + dual X/M areas = the 158 stats bins T.81 publishes) through byte-EXACT round trips at 8/12/16-bit; stream pins (SOF11+DAC, no DHT/DQT) from the real marker walk; arith_smaller pins conditioned estimation beating per-image optimal Huffman.",
     "q226_substring_dedup": "Exact substring dedup, r13 head: overlapping 10-token windows materialize in the scan projection (transform over sequence) and posexplode, immediately reduced to (id, n_tokens, pos, xxhash64(window)) and lazily checkpointed ONCE; ONE shuffle on the 8-byte window hash for global occurrence counts (map-side combine), one join back keyed the same way (pinned shuffle_hash), then a per-doc window sort for the lag()-based interval merge — linear in total tokens, no pairwise join, no suffix array. Oracle still groups window strings; 3-SF sweeps pin equality.",
     "q227_bpe_train": "BPE trainer: one corpus pass for the word census (explode + count shuffle), localCheckpoint bounds the vocab lineage; each of the 8 driver-loop iterations is a pair-explode + keyed sum over the DISTINCT-WORD table (vocab-sized, not corpus-sized) + a 1-row collect + a pure replace() projection. The corpus is touched exactly once.",
     "q228_ivf_int8_rerank": "Composed ANN, r13: the cell label rides the quantize_int8 scan projection (the corpus self-join on id that re-attached it is gone — 2 fewer exchanges); centroid build is q26's bounded posexplode agg; routing joins the tiny centroid table broadcast; quantized scoring joins corpus cells to the BROADCAST routed-query table on cell id (only routed cells scanned); shortlist + n_candidates share one per-query window; exact rerank touches <=32 raw vectors per query. Audit legs (cell-exact, global brute force) are the linear residue.",

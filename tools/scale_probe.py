@@ -170,11 +170,6 @@ PROBE100 = {
     # and the exact legs (float top-5 audits) are the linear residue
     "q223_int8_ann": QUERIES["q223_int8_ann"],
     "q224_pq_ann": QUERIES["q224_pq_ann"],
-    # r10 codec additions: the arithmetic JPEG profiles — per-bit
-    # Python entropy layers inside the embarrassingly-parallel Arrow
-    # map shape; wall tracks the x100 OUTPUT rows, per-doc cost flat
-    "q220_jpeg_arithmetic": QUERIES["q220_jpeg_arithmetic"],
-    "q225_jpeg_arith_lossless": QUERIES["q225_jpeg_arith_lossless"],
     # r11 additions: exact substring dedup (window explode + count
     # shuffle + interval merge — must track total tokens ~linearly),
     # the BPE trainer (one corpus census, then 8 vocab-sized rounds —
